@@ -13,6 +13,21 @@ Spark runtime knobs the reference never had:
   ``/root/reference/gdutils/apis/dac.py:44``); we standardize on UTC
   (SURVEY.md §7 trap 7).
 * Arrow enabled for any pandas-interchange path (Pandas UDFs, toPandas).
+* DataFrame debugging off (``spark.python.sql.dataFrameDebugging.enabled
+  =false``). With it on, PySpark 4.1 wraps every ``pyspark.sql.functions``
+  and Column call to record its Python call site: an ``inspect`` stack walk
+  plus several JVM round trips (active-session lookup, JVM class lookup,
+  ``conf.get``, origin set/clear) per call. A short request builds
+  hundreds of Column expressions, so this was most of its Py4J traffic.
+  The trade-off: errors no longer carry the ``== DataFrame ==`` call-site
+  context. They still name the cause, e.g. an unresolved column's
+  ``AnalysisException`` names the column. Callers who want the context
+  pass ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled":
+  "true"}``. PySpark reads this conf once per process, from the first
+  active session that asks, so it must be set when the session is built.
+  Sessions the caller builds itself are not touched.
+* ``local[N]`` with N from ``SPARK_GRAFT_CPUS``, else the CPUs this
+  process may run on (``os.sched_getaffinity``).
 """
 
 from __future__ import annotations
@@ -21,7 +36,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(
+    os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+)
 
 
 def get_spark(
@@ -54,6 +71,8 @@ def get_spark(
         # trees into interpreted eval
         .config("spark.driver.extraJavaOptions", "-XX:ReservedCodeCacheSize=512m")
         .config("spark.ui.enabled", "false")
+        # per-call stack capture; see the module docstring
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # guide §3.1: allow AQE to rewrite a planned sort-merge join to
         # shuffled-hash AT RUNTIME when every post-shuffle build

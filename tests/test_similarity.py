@@ -1039,3 +1039,33 @@ def test_knn_query_id_type_follows_queries_table(embeddings):
             )
         assert empty.count() == 0
         assert nonempty.count() > 0
+
+
+_APPENDED_SCRIPT = """
+import os, sys
+from gdutils_spark.queries_ext import emb_knn_ivfpq_appended
+from gdutils_spark.session import get_spark
+spark = get_spark("ivfpq-scratch", cpus=2)
+assert emb_knn_ivfpq_appended(spark, sys.argv[1]).count() > 0
+print(sorted(os.listdir(os.environ["SPARK_GRAFT_RT_TMPDIR"])))
+"""
+
+
+def test_ivfpq_appended_scratch_removed_at_exit(sf_smoke, tmp_path):
+    """emb_knn_ivfpq_appended stages its index under a pid-keyed scratch
+    path that its lazy result reads, so it can only go at interpreter
+    exit: a finished process leaves none of the three directories."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_RT_TMPDIR=str(tmp_path))
+    out = subprocess.run(
+        [sys.executable, "-c", _APPENDED_SCRIPT, sf_smoke],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    staged = out.stdout.strip().splitlines()[-1]
+    assert "gdutils_ivfpq_appended_" in staged  # present while running
+    assert os.listdir(tmp_path) == []

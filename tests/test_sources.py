@@ -151,3 +151,138 @@ def test_erddap_csv_inferred_epoch_time_rows_survive(spark, tmp_path):
     # inference keeps columns as STRING (units row pollutes it — the
     # documented no-schema caveat); presence, not type, is under test
     assert [r.temperature for r in rows] == ["3.5", "4.5"]
+
+
+# ---- load_table schema memo ----------------------------------------------
+
+BENCH_SF = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "benchmark", "data", "sf0.01",
+)
+
+
+def _next_job_id(spark) -> int:
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+def test_warm_load_table_starts_no_job(spark):
+    from gdutils_spark.sources import tables
+
+    tables._schema_memo.clear()
+    j0 = _next_job_id(spark)
+    tables.load_table(spark, BENCH_SF, "orders")  # cold: infers
+    j1 = _next_job_id(spark)
+    tables.load_table(spark, BENCH_SF, "orders")  # warm: memo hit
+    j2 = _next_job_id(spark)
+    assert j1 > j0  # the probe sees the inference job
+    assert j2 == j1
+
+
+def test_memo_hit_matches_fresh_inference_on_every_table(spark):
+    from gdutils_spark.sources import tables
+
+    for name in tables.TABLES:
+        tables._schema_memo.clear()
+        fresh = tables.load_table(spark, BENCH_SF, name)
+        hit = tables.load_table(spark, BENCH_SF, name)
+        assert hit.schema == fresh.schema, name
+        assert hit.count() == fresh.count(), name
+        assert hit.exceptAll(fresh).isEmpty(), name
+        # timestamp normalization holds on the memo path too
+        for c in tables._TS_COLS.get(name, ()):
+            assert dict(hit.dtypes)[c] == "timestamp", (name, c)
+
+
+def test_memo_sees_file_rewritten_in_place(spark, tmp_path):
+    """A rewrite with a different schema (and a different timestamp
+    encoding) must not be read with the stale memoized schema."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from gdutils_spark.sources.tables import load_table
+
+    path = tmp_path / "events.parquet"
+    stamps = [dt.datetime(2024, 1, 1, 6), dt.datetime(2024, 2, 3, 4, 5)]
+    pq.write_table(
+        pa.table({"ts": pa.array(stamps, pa.timestamp("us")), "a": [1, 2]}),
+        path,
+    )
+    v1 = load_table(spark, str(tmp_path), "events")
+    load_table(spark, str(tmp_path), "events")  # memo hit
+    assert v1.columns == ["ts", "a"]
+    pq.write_table(
+        pa.table({
+            "ts": pa.array(stamps, pa.timestamp("ns")),
+            "a": ["x", "y"],
+            "b": [3.5, 4.5],
+        }),
+        path,
+    )
+    v2 = load_table(spark, str(tmp_path), "events")
+    assert v2.dtypes == [("ts", "timestamp"), ("a", "string"), ("b", "double")]
+    rows = sorted(v2.collect())
+    assert [r.ts for r in rows] == stamps
+    assert [r.a for r in rows] == ["x", "y"]
+
+
+def test_memo_misses_when_inference_conf_changes(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from gdutils_spark.sources.tables import load_table
+
+    pq.write_table(pa.table({"blob": pa.array([b"ab", b"cd"], pa.binary())}),
+                   tmp_path / "blobs.parquet")
+    key = "spark.sql.parquet.binaryAsString"
+    assert load_table(spark, str(tmp_path), "blobs").dtypes == [("blob", "binary")]
+    spark.conf.set(key, "true")
+    try:
+        df = load_table(spark, str(tmp_path), "blobs")
+        assert df.dtypes == [("blob", "string")]
+        assert sorted(r.blob for r in df.collect()) == ["ab", "cd"]
+    finally:
+        spark.conf.unset(key)
+    assert load_table(spark, str(tmp_path), "blobs").dtypes == [("blob", "binary")]
+
+
+def test_directory_table_still_loads(spark, tmp_path):
+    """A multi-file table directory keeps plain inference (no memo)."""
+    from gdutils_spark.sources import tables
+
+    d = str(tmp_path / "nums.parquet")
+    spark.range(0, 10, numPartitions=2).write.parquet(d)
+    df = tables.load_table(spark, str(tmp_path), "nums")
+    assert sorted(r.id for r in df.collect()) == list(range(10))
+    assert not any(k[0] == os.path.realpath(d) for k in tables._schema_memo)
+
+
+def test_concurrent_loads_share_one_memo_entry_per_table(spark):
+    """Driver threads (the operators' construction pools) may load
+    tables at once: every load still gets the inferred schema, and the
+    memo ends with one entry per table."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from gdutils_spark.sources import tables
+
+    names = ("orders", "events", "region", "embeddings")
+    expected = {n: tables.load_table(spark, BENCH_SF, n).schema for n in names}
+    tables._schema_memo.clear()
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=16) as pool:
+            futs = [
+                (n, pool.submit(tables.load_table, spark, BENCH_SF, n))
+                for n in names * 8
+            ]
+            got = [(n, f.result(timeout=120).schema) for n, f in futs]
+    finally:
+        sys.setswitchinterval(interval)
+    assert all(schema == expected[n] for n, schema in got)
+    paths = [k[0] for k in tables._schema_memo]
+    assert sorted(paths) == sorted(
+        os.path.realpath(os.path.join(BENCH_SF, f"{n}.parquet")) for n in names
+    )
