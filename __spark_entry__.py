@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from gdutils_spark.queries import ORACLE, QUERIES  # noqa: E402
+from gdutils_spark.session import apply_policy  # noqa: E402
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
@@ -49,8 +50,14 @@ def _ship_package(spark: SparkSession) -> None:
 
 
 def _wrap(fn):
+    """Adapt a registry query to the driver-owned session: ship the
+    package and apply the engine's session policy (UTC, nanos-as-long,
+    re-coalescable cached plans; see ``gdutils_spark.session``) before
+    the query builds its plan."""
+
     def run(spark: SparkSession, sf_dir: str):
         _ship_package(spark)
+        apply_policy(spark)
         return fn(spark, sf_dir)
 
     return run
@@ -59,8 +66,7 @@ def _wrap(fn):
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on sf0.001: daily event stats (the reference's daily
     profile-stats aggregate, /root/reference/gdutils/__init__.py:574-576)."""
-    _ship_package(spark)
-    return QUERIES["daily_event_stats"](spark, SMOKE_SF_DIR)
+    return _wrap(QUERIES["daily_event_stats"])(spark, SMOKE_SF_DIR)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

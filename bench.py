@@ -22,111 +22,18 @@ from gdutils_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Host-mode anchors (VERDICT r10 task #4): the bench host oscillates
-# ~2x between speed modes, and a min-of-3 inside one slow window still
-# records a slow-mode number that reads as a regression next round.
-# The artifact therefore carries its own normalization: three FIXED,
-# long-stable, pure-relational anchor queries are re-timed (min-of-3)
-# at the START and END of the run, and `host_mode_factor` = median of
-# best-observed/reference. Cross-round comparison divides by it
-# (tools/bench_compare.py). Reference values are the r10 idle-host
-# fast-mode run (bench_r10_full.json) at sf0.1 — refresh them only if
-# an anchor's CODE changes, never for host reasons. At other SFs the
-# factor absorbs the data-size difference too, which is fine: the
-# normalization in bench_compare divides two artifacts' factors, so
-# any same-SF pair still cancels to a pure host-mode ratio.
-ANCHOR_REF: dict[str, float] = {
-    "q1_pricing_summary": 0.784,
-    "q3_top_orders": 0.4354,
-    "daily_event_stats": 0.3358,
-}
-
-# r15 (VERDICT r14 item 5): the anchors are the normalization yardstick,
-# so they must be IMMUNE to session-conf edits — a conf change that moves
-# only the anchors would manufacture fleet-wide "improvement" (or hide a
-# real one). Anchors therefore run under this PINNED conf, the values the
-# r10 reference run used (r14 added preferSortMergeJoin=false +
-# the AQE SHJ threshold to get_spark; the anchor yardstick must not move
-# with such edits). Refresh ANCHOR_REF only if an anchor's QUERY CODE
-# changes — and the plan fingerprints recorded in the artifact make such
-# a change detectable offline.
-ANCHOR_CONF: dict[str, str] = {
-    "spark.sql.join.preferSortMergeJoin": "true",
-    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "0",
-}
-
 
 def _sf_from_dir(d: str) -> float:
     m = re.search(r"sf([0-9.]+)", d)
     return float(m.group(1)) if m else -1.0
 
 
-def _anchor_conf(spark):
-    """Context manager: apply ANCHOR_CONF, restore the session values."""
-    from contextlib import contextmanager
-
-    @contextmanager
-    def cm():
-        old = {k: spark.conf.get(k, None) for k in ANCHOR_CONF}
-        for k, v in ANCHOR_CONF.items():
-            spark.conf.set(k, v)
-        try:
-            yield
-        finally:
-            for k, v in old.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
-
-    return cm()
-
-
-def _anchor_plan_fp(spark) -> dict[str, str]:
-    """Stable fingerprint of each anchor's physical plan under the
-    pinned anchor conf: formatted explain with volatile tokens (expr
-    ids, plan ids, file paths, stats) stripped, md5-hashed. A changed
-    fingerprint between rounds means the anchor's PLAN changed — the
-    re-pin rule for ANCHOR_REF is tied to this, not prose."""
-    import hashlib
-
-    from gdutils_spark.plans import formatted_plan
-
-    out: dict[str, str] = {}
-    with _anchor_conf(spark):
-        for name in sorted(ANCHOR_REF):
-            plan = formatted_plan(QUERIES[name](spark, SF_DIR))
-            norm = re.sub(r"#\d+[L]?", "#", plan)
-            norm = re.sub(r"plan_id=\d+", "plan_id=", norm)
-            norm = re.sub(r"Statistics\([^)]*\)", "Statistics()", norm)
-            norm = re.sub(r"Location[^\n]*", "Location", norm)
-            out[name] = hashlib.md5(norm.encode()).hexdigest()
-    return out
-
-
-def _time_anchors(spark, runs: int = 3) -> dict[str, float]:
-    out: dict[str, float] = {}
-    with _anchor_conf(spark):
-        for name in sorted(ANCHOR_REF):
-            fn = QUERIES[name]
-            best = float("inf")
-            for _ in range(runs):
-                t0 = time.perf_counter()
-                fn(spark, SF_DIR).collect()
-                best = min(best, time.perf_counter() - t0)
-            out[name] = round(best, 4)
-    return out
-
-
 def main() -> None:
     spark = get_spark("gdutils-spark-bench")
     # Warmup of shared infrastructure: parquet footers for every table,
     # whole-stage-codegen pipeline, and the Python worker pool used by
-    # Arrow-batched stages. NOTE the anchor protocol below deliberately
-    # runs three registry queries (q1_pricing_summary, q3_top_orders,
-    # daily_event_stats) 3x each BEFORE the main loop — their `cold`
-    # samples would be warm-polluted, so they are excluded from the
-    # cold dict (ADVICE r11).
+    # Arrow-batched stages. No registry query runs before the main loop,
+    # so every query's first sample is a true cold one.
     from gdutils_spark.sources.tables import load_table
 
     for t in (
@@ -161,7 +68,6 @@ def main() -> None:
     # overhead (query start/stop, checkpoint IO), which min-of-N cannot
     # amortize and which triples bench time for no signal.
     STREAMING = {"rt_stream_dedup", "rt_stream_daily_counts"}
-    anchors_start = _time_anchors(spark)
     timings: dict[str, float] = {}
     cold: dict[str, float] = {}
     for name in sorted(QUERIES):
@@ -171,21 +77,10 @@ def main() -> None:
             t0 = time.perf_counter()
             fn(spark, SF_DIR).collect()
             elapsed = time.perf_counter() - t0
-            if r == 0 and name not in ANCHOR_REF:
-                # anchors already ran 3x in _time_anchors: their first
-                # main-loop sample is warm, not cold — recording it as
-                # "cold" would mislead cross-round cold analysis
+            if r == 0:
                 cold[name] = round(elapsed, 4)
             best = min(best, elapsed)
         timings[name] = round(best, 4)
-
-    anchors_end = _time_anchors(spark)
-    # best observed per anchor across the two sessions / reference,
-    # median over anchors: robust to one anchor hitting a stray GC
-    ratios = sorted(
-        min(anchors_start[a], anchors_end[a]) / ANCHOR_REF[a] for a in ANCHOR_REF
-    )
-    host_mode_factor = round(ratios[len(ratios) // 2], 4)
 
     total = round(sum(timings.values()), 4)
     # Full per-query artifact: the driver's BENCH_r{N}.json keeps only a
@@ -208,20 +103,13 @@ def main() -> None:
                 # between speed modes — a cold outlier that the warm
                 # min-of-3 contradicts is host jitter, not a regression.
                 # Cross-round analysis must use `queries` (warm), which
-                # tools/bench_compare.py reads by default. Anchor queries
-                # are absent here (warm-polluted by the anchor protocol).
+                # tools/bench_compare.py reads by default.
                 "cold_note": (
                     "single-sample first-run walls; compare rounds on "
                     "'queries' (warm min-of-3), never on this dict"
                 ),
                 "agg": f"min_of_{RUNS}",
                 "cold_total": round(sum(cold.values()), 4),
-                "anchors_start": anchors_start,
-                "anchors_end": anchors_end,
-                "anchor_ref": ANCHOR_REF,
-                "anchor_conf": ANCHOR_CONF,
-                "anchor_plan_fp": _anchor_plan_fp(spark),
-                "host_mode_factor": host_mode_factor,
                 "metric": "total_query_wall_seconds",
                 "unit": "sec",
                 "sf": _sf_from_dir(SF_DIR),
@@ -253,9 +141,6 @@ def main() -> None:
                 "queries": timings,
                 "agg": f"min_of_{RUNS}",
                 "cold_total": round(sum(cold.values()), 4),
-                "anchors_start": anchors_start,
-                "anchors_end": anchors_end,
-                "host_mode_factor": host_mode_factor,
                 "metric": "total_query_wall_seconds",
                 "unit": "sec",
                 "sf": _sf_from_dir(SF_DIR),

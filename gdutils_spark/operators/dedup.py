@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from gdutils_spark.session import scoped_conf
+
 from .graph import _pinned_partitioned
 
 DEFAULT_NUM_PERMS = 16
@@ -758,17 +760,12 @@ def connected_components(
     # still gets thousands-way parallelism.
     n_edges = base.count()  # materializes the pair pipeline exactly once
     spark = edges.sparkSession
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    loop_parts = max(1, min(int(prev_parts), n_edges // 200_000 + 1))
+    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    loop_parts = max(1, min(session_parts, n_edges // 200_000 + 1))
     # Materialize the symmetrized edges at loop parallelism — each round
-    # re-reads this tiny checkpoint, not the upstream pipeline. The pin
-    # goes through graph._pinned_partitioned (r15): a plain
-    # repartition+localCheckpoint under AQE captures UnknownPartitioning
-    # into the replacement LogicalRDD (probe-verified), so the join side
-    # of EVERY propagation round silently re-exchanged the edge list the
-    # repartition was supposed to have placed once; the AQE-off pin
-    # preserves HashPartitioning(a, loop_parts) and the per-round join
-    # reuses it (exchange only on the node-sized label side).
+    # re-reads this tiny checkpoint, not the upstream pipeline. The AQE-off
+    # pin (graph._pinned_partitioned) keeps HashPartitioning(a, loop_parts),
+    # so each round's join exchanges only the node-sized label side.
     sym = _pinned_partitioned(
         base.union(base.select(F.col("b"), F.col("a"))),
         "a",
@@ -796,8 +793,7 @@ def connected_components(
     else:
         chk = F.xxhash64("comp").cast("decimal(38,0)")
     prev: object = None
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(loop_parts)}):
         for _ in range(max_iter):
             prop = sym.join(labels, sym["a"] == labels["node"]).select(
                 F.col("b").alias("node"), F.col("comp")
@@ -814,8 +810,6 @@ def connected_components(
             if total == prev:
                 break
             prev = total
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     sym.unpersist()
     return labels.select("node", "comp")
 

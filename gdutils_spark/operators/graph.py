@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gdutils_spark.session import scoped_conf
+
 
 def pagerank(
     edges: DataFrame,
@@ -120,6 +122,12 @@ def pagerank(
     — the gate reads the node count via ``n_df.first()`` (one pass over
     the pinned node relation, itself derived from a full edge scan) —
     rather than staying fully lazy until the caller's first action.
+    When the gate passes, one more construction-time job eagerly pins
+    the EDGE list by ``dst`` (``_pinned_partitioned``): an edge-sized,
+    not node-sized, row-format ``localCheckpoint`` that spills but is
+    lost with its executor. For edge lists too large for that, pass
+    ``broadcast_max_nodes=None`` (no pin), or stage the edges as parquet
+    first (the ``stage_path`` convention of ``similarity.ivfpq_index``).
     """
     if n_iters < 0:
         raise ValueError("n_iters must be >= 0")
@@ -305,39 +313,22 @@ def _fits(df: DataFrame, bound: int) -> bool:
 def _pinned_partitioned(
     df: DataFrame, *cols: str, num_partitions: int | None = None
 ) -> DataFrame:
-    """Eagerly pin ``df`` hash-partitioned by ``cols`` (partition count =
-    the session's ``spark.sql.shuffle.partitions``, i.e. scale-derived,
-    not a local constant) so that every loop iteration reads ONE
-    co-partitioned relation and the per-iteration aggregates keyed on
-    (an alias of) ``cols`` see the partitioning and plan with ZERO
-    shuffle Exchange (guide §2.4: operations keyed the same way share
-    one exchange; broadcast joins and alias-only Projects preserve the
-    streamed side's partitioning).
+    """Eagerly pin ``df`` hash-partitioned by ``cols`` (``num_partitions``,
+    else the session's ``spark.sql.shuffle.partitions``), so that loop
+    aggregates keyed on (an alias of) ``cols`` read one co-partitioned
+    relation and plan with no Exchange (guide §2.4).
 
-    AQE is toggled off around this one pin: ``localCheckpoint`` captures
-    the physical plan's output partitioning into the replacement
-    ``LogicalRDD``, but under AQE the captured plan is an un-executed
-    ``AdaptiveSparkPlan`` whose partitioning is still
-    ``UnknownPartitioning`` (probe-verified r15 — this is why the r14
-    attempt measured the partitioning as lost), which would put the
-    per-iteration Exchange right back. The toggle is plan-time conf,
-    scoped to this EAGER pin and restored in ``finally``; the rest of
-    the query still plans under AQE, rows are identical either way.
+    AQE is off for this one eager pin, in a
+    :func:`gdutils_spark.session.scoped_conf`: under AQE the plan that
+    ``localCheckpoint`` captures is an un-executed ``AdaptiveSparkPlan``
+    with ``UnknownPartitioning``, which would put the per-iteration
+    Exchange right back. The rest of the query plans under AQE; rows are
+    identical either way.
     """
     spark = df.sparkSession
-    if num_partitions is not None:
-        n = int(num_partitions)
-    else:
-        try:
-            n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):
-            n = spark.sparkContext.defaultParallelism
-    old = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    n = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
+    with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
         return df.repartition(n, *cols).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old)
 
 
 def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -888,6 +879,10 @@ def label_propagation(
     at or below this bound, the label vector broadcasts into the
     per-round neighbor join and the edge list is never re-exchanged;
     ``None`` (or a larger graph) falls back to the shuffle path.
+    EAGERNESS NOTE: as in :func:`pagerank`, the gate's bounded node
+    count (and the seed dup probe under ``validate=True``) run at
+    CONSTRUCTION time, and a passing gate eagerly pins the edge-sized
+    EDGE list by ``dst``; the escape hatches are the same.
     """
     if n_iters < 0:
         raise ValueError("n_iters must be >= 0")

@@ -14,9 +14,11 @@ from __future__ import annotations
 
 import io
 import re
-from contextlib import redirect_stdout
+from contextlib import nullcontext, redirect_stdout
 
 from pyspark.sql import DataFrame
+
+from gdutils_spark.session import scoped_conf
 
 
 def formatted_plan(df: DataFrame) -> str:
@@ -29,18 +31,18 @@ def formatted_plan(df: DataFrame) -> str:
 
 def simple_plan(df: DataFrame, disable_aqe: bool = False) -> str:
     """Simple-mode explain (codegen stages marked ``*(n)``). AQE hides
-    codegen markers until runtime; ``disable_aqe`` shows the static plan."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        if disable_aqe:
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain()
-        return buf.getvalue()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    codegen markers until runtime; ``disable_aqe`` shows the static plan
+    (AQE off in a :func:`~gdutils_spark.session.scoped_conf` for the
+    explain only). Without it the session conf is not touched."""
+    buf = io.StringIO()
+    scope = (
+        scoped_conf(df.sparkSession, {"spark.sql.adaptive.enabled": "false"})
+        if disable_aqe
+        else nullcontext()
+    )
+    with scope, redirect_stdout(buf):
+        df.explain()
+    return buf.getvalue()
 
 
 def n_exchanges(df_or_plan: DataFrame | str) -> int:

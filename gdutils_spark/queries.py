@@ -30,13 +30,6 @@ def _dec(c, scale: int = 2):
     return F.col(c).cast(f"decimal(18,{scale})")
 
 
-def _utc(spark: SparkSession) -> None:
-    # The driver owns the SparkSession; pin the session timezone so
-    # date-part extraction matches DuckDB's naive-timestamp semantics
-    # (SURVEY.md §7 trap 7).
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-
-
 # ---------------------------------------------------------------------------
 # Relational core (SURVEY §2.1-§2.4, §2.6-§2.8)
 # ---------------------------------------------------------------------------
@@ -45,7 +38,6 @@ def _utc(spark: SparkSession) -> None:
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1-shaped multi-aggregate (A1/A10 parity: groupby + dict-agg,
     /root/reference/gdutils/__init__.py:574-576,361-369)."""
-    _utc(spark)
     l = load_table(spark, sf_dir, "lineitem").where(
         F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp")
     )
@@ -87,7 +79,6 @@ def q3_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join + group + deterministic top-k (J1/J2 + O3 parity:
     /root/reference/gdutils/__init__.py:107-114;
     /root/reference/scripts/catalog_dac_datasets.py:135)."""
-    _utc(spark)
     cutoff = F.lit("1996-07-01").cast("timestamp")
     c = load_table(spark, sf_dir, "customer").where(
         F.col("c_mktsegment") == "BUILDING"
@@ -123,7 +114,6 @@ LIMIT 10
 def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-way equi-join with broadcast dims (J1-J3 parity at star-schema
     scale: dims broadcast, fact shuffles once)."""
-    _utc(spark)
     region = load_table(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
     nation = load_table(spark, sf_dir, "nation")
     customer = load_table(spark, sf_dir, "customer")
@@ -169,7 +159,6 @@ def daily_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship daily-stats aggregate (A1:
     /root/reference/gdutils/__init__.py:574-576 — groupby(date).agg(mean,
     mean, size) re-expressed as one hash aggregate)."""
-    _utc(spark)
     e = load_table(spark, sf_dir, "events")
     return e.groupBy(F.to_date("ts").alias("date")).agg(
         (F.sum(_dec("value")).cast("double") / F.count(F.lit(1))).alias("avg_value"),
@@ -192,7 +181,6 @@ def user_summaries(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-entity summary rows (A6/A7/A11 + O4 first-row semantics:
     /root/reference/gdutils/__init__.py:489-501,595-614 — the N+1 harvest
     loop collapsed into one groupBy; iloc[0]-after-sort → min_by)."""
-    _utc(spark)
     e = load_table(spark, sf_dir, "events")
     t = F.col("ts")
     return e.groupBy("user_id").agg(
@@ -224,7 +212,6 @@ def yearly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Yearly rollup report (A3/A10 parity:
     /root/reference/gdutils/__init__.py:361-369 — three yearly aggregates in
     one groupBy instead of three passes)."""
-    _utc(spark)
     o = load_table(spark, sf_dir, "orders")
     return o.groupBy(F.year("o_orderdate").alias("year")).agg(
         F.count_distinct("o_custkey").alias("active_customers"),
@@ -276,21 +263,18 @@ def calendar_ymd_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """year×month rows, day-of-month columns, event counts — the signature
     groupby-unstack-reindex pivot (/root/reference/gdutils/__init__.py:
     160-180) as one pivot with dense values."""
-    _utc(spark)
     return calendar(load_table(spark, sf_dir, "events"), "ts", "ymd", "count")
 
 
 def calendar_ym_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """year rows, month columns, order counts (ym variant:
     /root/reference/gdutils/__init__.py:182-199)."""
-    _utc(spark)
     return calendar(load_table(spark, sf_dir, "orders"), "o_orderdate", "ym", "count")
 
 
 def calendar_md_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """month rows, day columns (md variant:
     /root/reference/gdutils/__init__.py:201-217)."""
-    _utc(spark)
     return calendar(load_table(spark, sf_dir, "orders"), "o_orderdate", "md", "count")
 
 
@@ -299,7 +283,6 @@ def calendar_ym_active_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     period if it has ANY activity (pandas .any() at
     /root/reference/gdutils/__init__.py:294-345 → countDistinct, SURVEY §7
     trap 2)."""
-    _utc(spark)
     return calendar(
         load_table(spark, sf_dir, "orders"),
         "o_orderdate",
@@ -317,7 +300,6 @@ def calendar_ym_active_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def customer_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Anti-join orphan listing (J8:
     /root/reference/gdutils/__init__.py:940-941)."""
-    _utc(spark)
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     return orphans(c, o.select(F.col("o_custkey").alias("c_custkey")), "c_custkey")
@@ -332,7 +314,6 @@ WHERE c_custkey NOT IN (SELECT o_custkey FROM orders WHERE o_custkey IS NOT NULL
 def customer_orphan_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left join + null-probe boolean flag (J2+P10 'orphaned' pattern:
     /root/reference/gdutils/apis/status.py:52-54)."""
-    _utc(spark)
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
     o = load_table(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("c_custkey")
@@ -359,7 +340,6 @@ def user_first_week_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     right tool when the windows are a genuine (catalog-sized) dimension."""
     from pyspark.sql.window import Window
 
-    _utc(spark)
     e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id")
     return (
@@ -398,7 +378,6 @@ GROUP BY e.user_id
 def part_name_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String prefix/suffix predicates (P6:
     /root/reference/gdutils/__init__.py:424,516-518)."""
-    _utc(spark)
     p = load_table(spark, sf_dir, "part")
     return p.where(
         F.col("p_name").startswith("small") & ~F.col("p_name").endswith("bolt")
@@ -415,7 +394,6 @@ WHERE p_name LIKE 'small%' AND p_name NOT LIKE '%bolt'
 def distinct_user_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row dedup (P14 '&distinct()':
     /root/reference/gdutils/osmc/__init__.py:197)."""
-    _utc(spark)
     e = load_table(spark, sf_dir, "events")
     return e.select("user_id", "event_type").distinct()
 
@@ -424,7 +402,6 @@ def top_order_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-row-per-group (O4 iloc[0] semantics:
     /root/reference/gdutils/__init__.py:606-607) via max_by — no window, no
     sort; ties broken by orderkey inside the same aggregate."""
-    _utc(spark)
     o = load_table(spark, sf_dir, "orders")
     # max_by on a (price, -orderkey) struct = highest price, lowest key tie-break
     rank = F.struct(
@@ -451,7 +428,6 @@ SELECT o_custkey, o_orderkey, o_totalprice FROM (
 def tagged_event_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION ALL of filtered subsets (R2 pd.concat:
     /root/reference/gdutils/osmc/__init__.py:238)."""
-    _utc(spark)
     e = load_table(spark, sf_dir, "events")
     high = e.where((F.col("event_type") == "purchase") & (F.col("value") > 100)).select(
         F.lit("high_purchase").alias("tag")
@@ -473,7 +449,6 @@ def calendar_ymd_events_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dense-spine ym calendar (the reference's *intended* reindex,
     /root/reference/gdutils/__init__.py:166-169 — a latent no-op bug there;
     implemented for real here via sequence+explode spine)."""
-    _utc(spark)
     from gdutils_spark.operators.calendar import calendar_dense
 
     return calendar_dense(
@@ -504,7 +479,6 @@ def user_day_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     /root/reference/gdutils/__init__.py:587-589 — sequence+explode AFTER
     the per-entity bounds aggregate, so the explode is one row per entity
     per day, not per observation)."""
-    _utc(spark)
     from gdutils_spark.operators.summaries import deployment_days
 
     e = load_table(spark, sf_dir, "events")
@@ -526,7 +500,6 @@ def event_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-nested column parsing (§2.8 JSON family:
     /root/reference/gdutils/apis/dac.py:67 parse + geojson build) —
     get_json_object stays JVM-side."""
-    _utc(spark)
     e = load_table(spark, sf_dir, "events")
     # try_cast, not cast: a VALID-JSON props row whose $.k is a string
     # ("vé") must read as NULL, not throw an ANSI CAST_INVALID_INPUT
@@ -562,7 +535,6 @@ def lineitem_shipped_90d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact-to-fact key+range join (J5 at scale: equi part shuffles on the
     order key, range is a residual; neither side broadcastable at 100 TB —
     AQE picks the physical join)."""
-    _utc(spark)
     l = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
     joined = l.join(
@@ -590,7 +562,6 @@ GROUP BY o_orderpriority
 def event_value_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional when/otherwise bucketing (§2.8 conditional family +
     P10 derived flags: /root/reference/gdutils/__init__.py:940-941)."""
-    _utc(spark)
     e = load_table(spark, sf_dir, "events")
     bucket = (
         F.when(F.col("value") < 50, F.lit("low"))
@@ -616,7 +587,6 @@ def calendar_slice_ym(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lexicographic label-range slice on calendar axes (P9 — pandas
     .loc[(y0,m0):(y1,m1)] semantics, SURVEY §7 trap 4: the bound is on the
     (year, month) TUPLE, not per-column)."""
-    _utc(spark)
     from gdutils_spark.operators.calendar import calendar_long
 
     cal = calendar_long(
@@ -648,7 +618,6 @@ def order_last_event_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/joins.asof_join."""
     from gdutils_spark.operators.joins import asof_join
 
-    _utc(spark)
     o = load_table(spark, sf_dir, "orders")
     # right side must be unique per (key, ts) for deterministic matches
     e = (
@@ -689,7 +658,6 @@ def user_event_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same partitioning reused across stages)."""
     from pyspark.sql import Window
 
-    _utc(spark)
     e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = F.unix_micros(F.col("ts")) - F.lag(F.unix_micros(F.col("ts"))).over(w)
@@ -728,7 +696,6 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pure filter + single aggregate (P8/P13 + A2 at fact scale): every
     predicate reaches the parquet scan as a PushedFilter; the agg is one
     partial+final pair with no grouping key — the minimal full-scan plan."""
-    _utc(spark)
     l = load_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1995-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-01-01").cast("timestamp"))
@@ -760,7 +727,6 @@ def suppliers_with_shipments_semi(spark: SparkSession, sf_dir: str) -> DataFrame
     /root/reference/gdutils/__init__.py:737-742). The semi join keeps the
     probe side unduplicated — no post-join distinct needed — and the
     lineitem side never materializes columns."""
-    _utc(spark)
     s = load_table(spark, sf_dir, "supplier")
     l = load_table(spark, sf_dir, "lineitem").where(
         F.col("l_shipdate") >= F.lit("1998-01-01").cast("timestamp")
@@ -786,7 +752,6 @@ def customer_order_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort is local per partition."""
     from pyspark.sql import Window
 
-    _utc(spark)
     o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey")
@@ -826,7 +791,6 @@ def q4_priority_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     an equi key (hash-joinable) with a range predicate (applied as a
     post-probe filter) — no decorrelation needed by hand, Catalyst does
     it; the probe side stays unduplicated."""
-    _utc(spark)
     o = load_table(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1996-04-01").cast("timestamp"))
@@ -861,7 +825,6 @@ def q13_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     0), then the histogram of customers per order count. Two shuffles —
     one per aggregation level; the outer join's null rows become the
     c_count=0 bucket."""
-    _utc(spark)
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders").where(
         F.col("o_orderpriority") != "1-URGENT"
@@ -895,7 +858,6 @@ def rollup_order_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     (/root/reference/gdutils/__init__.py:156-158,361-369); grouping sets
     fuse them. ``lvl`` (grouping_id) distinguishes subtotal rows from
     genuine NULL keys."""
-    _utc(spark)
     o = load_table(spark, sf_dir, "orders")
     y = F.year("o_orderdate").alias("year")
     m = F.month("o_orderdate").alias("month")
@@ -933,7 +895,6 @@ def event_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     needs the full value set per group; at 100 TB swap in
     `approx_percentile` (t-digest sketch, partial-aggregable) and accept
     bounded error — same query shape, one line changed."""
-    _utc(spark)
     # measure policy (r13 null-fixture hunt): NULL and NaN values are
     # excluded — engines ORDER NaN differently inside exact percentile
     # (Spark sorts it largest, DuckDB's quantile_cont ignores it), so
@@ -970,7 +931,6 @@ def orders_above_cust_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     (/root/reference/scripts/catalog_dac_datasets.py:67-72) generalize to
     this shape; Spark plans one hash aggregate + one equi-join, both keyed
     on o_custkey so the aggregate side needs no second shuffle."""
-    _utc(spark)
     o = load_table(spark, sf_dir, "orders")
     avg_per_cust = o.groupBy(F.col("o_custkey").alias("k")).agg(
         (F.sum(_dec("o_totalprice")).cast("double") / F.count(F.lit(1))).alias(
@@ -1001,7 +961,6 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     exceeds a threshold, rejoined to orders/customer for the report row.
     The aggregate output (~1% of orders) broadcasts back against the
     orders scan, so the fact table shuffles once, for the groupBy."""
-    _utc(spark)
     l = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
@@ -1038,7 +997,6 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst extracts the common l_partkey equi-condition into a
     BroadcastHashJoin and leaves the brand/size/quantity disjunction as
     the join residual — no nested loop, one pass over lineitem."""
-    _utc(spark)
     l = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part")
     q, b, s = F.col("l_quantity"), F.col("p_brand"), F.col("p_size")
@@ -1073,7 +1031,6 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     month's revenue coming from a part-type prefix class, computed as
     100 * sum(CASE ...) / sum(...) over a broadcast part join — one pass
     over lineitem, both sums DECIMAL-exact, one final double division."""
-    _utc(spark)
     l = load_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-03-01").cast("timestamp"))
@@ -1114,7 +1071,6 @@ def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     The NOT IN plans as a broadcast anti join (the blacklist is a
     computed aggregate, small by construction); the distinct count is
     one partial/final aggregate pair."""
-    _utc(spark)
     l = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part").where(F.col("p_size") <= 20)
     bad = (
@@ -1150,7 +1106,6 @@ def q22_idle_high_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders (anti join), grouped by market segment. The average is
     DECIMAL sum / count — exact, so the threshold compare is
     engine-identical."""
-    _utc(spark)
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders").select("o_custkey")
     avg_bal = (
@@ -1197,7 +1152,6 @@ def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer-nation revenue per year for one nation PAIR in both
     directions (the disjunctive pair predicate sits as a join residual
     over two broadcast nation joins — never a nested loop)."""
-    _utc(spark)
     l = load_table(spark, sf_dir, "lineitem").where(
         F.col("l_shipdate").between(
             F.lit("1996-01-01").cast("timestamp"),
@@ -1261,7 +1215,6 @@ def q15_top_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ties-preserving max that Q15's scalar-subquery-on-a-view expresses,
     planned as one agg shuffle + a single-partition window over the
     supplier-count-sized aggregate."""
-    _utc(spark)
     from pyspark.sql.window import Window
 
     l = load_table(spark, sf_dir, "lineitem").where(
@@ -1307,7 +1260,6 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan to keep only lineitems under 20% of their part's average; the
     per-part aggregate is fact-derived, so no broadcast hint — AQE
     decides at runtime. Answer = yearly lost revenue / 7."""
-    _utc(spark)
     l = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part").where(F.col("p_brand") == "Brand#13")
     avg_q = l.groupBy(F.col("l_partkey").alias("_pk")).agg(
@@ -1359,7 +1311,6 @@ def q2_min_balance_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity: the filtered-catalog + merge chain of
     /root/reference/gdutils/__init__.py (search_datasets + merge), shaped
     as TPC-H Q2."""
-    _utc(spark)
     from pyspark.sql.window import Window
 
     l = load_table(spark, sf_dir, "lineitem")
@@ -1415,7 +1366,6 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     both sums stay DECIMAL until the final division so the double is
     reproducible. All five dimension joins broadcast; the only shuffle
     is the final 2-row year aggregate."""
-    _utc(spark)
     l = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part").where(F.col("p_type") == "ECONOMY")
     o = load_table(spark, sf_dir, "orders").where(
@@ -1493,7 +1443,6 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (order-insensitive exact sums); part and the dim stack broadcast, so
     the plan is fact-scan → broadcast joins → one (nation, year) hash
     agg."""
-    _utc(spark)
     l = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part").where(F.col("p_name").contains("red"))
     s = load_table(spark, sf_dir, "supplier")
@@ -1541,7 +1490,6 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold compare is `value·1000 > total` so both engines compare
     exact DECIMALs with no fractional multiplier precision drift. One
     fact shuffle (per-part agg); the national supplier set broadcasts."""
-    _utc(spark)
     l = load_table(spark, sf_dir, "lineitem")
     s = load_table(spark, sf_dir, "supplier")
     n = load_table(spark, sf_dir, "nation").where(F.col("n_name") == "NATION_3")
@@ -1588,7 +1536,6 @@ def q12_ship_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
     on identical day-boundary semantics; counts are exact integers. The
     orders join shuffles on orderkey (fact-to-fact, AQE-decided); the
     bucket agg is map-side-combinable on 3 keys."""
-    _utc(spark)
     l = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
     j = l.join(o, l.l_orderkey == o.o_orderkey)
@@ -1628,7 +1575,6 @@ def q20_surplus_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     (integer-scaled DECIMALs, no fractional multiplier). Part filter
     broadcasts into the fact scan; the pair agg is the single fact
     shuffle; the surviving supplier set semi-joins into the dim."""
-    _utc(spark)
     l = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part").where(F.col("p_name").startswith("small"))
     s = load_table(spark, sf_dir, "supplier")
@@ -1680,7 +1626,6 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     suppliers) — no self-joins back to the fact; the late-rows join
     reuses the same orderkey partitioning and the final per-supplier agg
     is dim-sized."""
-    _utc(spark)
     l = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "F")
     s = load_table(spark, sf_dir, "supplier")
@@ -1742,7 +1687,6 @@ def daily_revenue_7d_ma(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL (exact, order-insensitive) until the final cast, so sliding
     frames hash-match the oracle; daily agg and window share no keys, so
     the plan is one hash aggregate + one tiny sorted window."""
-    _utc(spark)
     from pyspark.sql.window import Window
 
     # undated orders have no day on the smoothing axis — and the NULL
@@ -1786,7 +1730,6 @@ def users_click_no_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     a click but no purchase — the funnel-drop query of an activity
     report. Spark plans it as a left-anti aggregate; at scale both sides
     shuffle once on the composite key."""
-    _utc(spark)
     e = load_table(spark, sf_dir, "events")
     day = F.to_date("ts").alias("date")
     clicked = e.where(F.col("event_type") == "click").select("user_id", day).distinct()
@@ -1806,7 +1749,6 @@ def q10_returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer over one quarter, deterministic top-20. The orders filter
     lands on the scan (partition-prunable on a date-partitioned staging
     of the fact table); customer broadcasts into the post-agg join."""
-    _utc(spark)
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= F.lit("1996-10-01").cast("timestamp"))
@@ -1850,7 +1792,6 @@ def event_type_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     /root/reference/gdutils/__init__.py:626,629-630). One conditional
     aggregate per known column value — single partial+final hash agg, not
     DataFrame.pivot's double aggregation round."""
-    _utc(spark)
     e = load_table(spark, sf_dir, "events")
     types = ["click", "error", "purchase", "signup", "view"]
     aggs = [

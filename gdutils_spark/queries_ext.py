@@ -1391,8 +1391,8 @@ def emb_knn_ivfpq_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = vectors.where(F.col("vec_id") < IVFPQ_SPLIT)
     delta = vectors.where(F.col("vec_id") >= IVFPQ_SPLIT)
     queries = vectors.where(F.col("vec_id") < N_QUERIES)
-    # deterministic per-PROCESS scratch, wiped at call start (the
-    # queries_rt._work_dir convention) and at interpreter exit:
+    # deterministic per-PROCESS scratch, wiped at call start and at
+    # interpreter exit:
     # same-process repeats (driver rounds, bench min-of-3) reuse one
     # name, while a concurrent bench/pytest/drive process gets its own —
     # without the pid a second process could rmtree this one's staged
@@ -1861,9 +1861,6 @@ def event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30-min inactivity) with per-session
     aggregates — one shuffle on user_id for both window passes and the
     final groupBy."""
-    from gdutils_spark.queries import _utc
-
-    _utc(spark)
     e = load_table(spark, sf_dir, "events")
     return ss.session_stats(
         e, "user_id", "ts", gap_minutes=SESSION_GAP_MIN, value_col="value"
@@ -3313,9 +3310,7 @@ def user_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly cohort retention over the event stream — cohort = ISO week
     of first activity, retention = distinct actives per week offset."""
     from gdutils_spark.operators import behavior as bh
-    from gdutils_spark.queries import _utc
 
-    _utc(spark)
     return bh.cohort_retention(load_table(spark, sf_dir, "events"))
 
 
@@ -3344,9 +3339,7 @@ def user_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Strict ordered view→click→purchase funnel (first-touch): one
     Catalyst fold over each user's time-ordered step events."""
     from gdutils_spark.operators import behavior as bh
-    from gdutils_spark.queries import _utc
 
-    _utc(spark)
     return bh.funnel(load_table(spark, sf_dir, "events"), steps=FUNNEL_STEPS)
 
 
@@ -3380,9 +3373,7 @@ def user_funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datetime import timedelta
 
     from gdutils_spark.operators import behavior as bh
-    from gdutils_spark.queries import _utc
 
-    _utc(spark)
     return bh.funnel(
         load_table(spark, sf_dir, "events"),
         steps=FUNNEL_STEPS,
@@ -3685,9 +3676,7 @@ def events_hll_users_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle computes the whole-corpus register table directly, so the
     merge's losslessness is itself the hash-checked claim."""
     from gdutils_spark.operators.sketches import hll_merge, hll_registers
-    from gdutils_spark.queries import _utc
 
-    _utc(spark)
     # ts filter explicit (r13 null-fixture hunt): the incremental split
     # is BY DATE, so an undated event belongs to neither batch — the
     # date comparisons already drop it silently on this side, but the
@@ -3766,9 +3755,7 @@ def part_copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returns the top 50 parts by rank, fully tie-broken."""
 
     from gdutils_spark.operators.graph import pagerank
-    from gdutils_spark.queries import _utc
 
-    _utc(spark)
     edges = _copurchase_edges(spark, sf_dir, both_directions=True)
     pr = pagerank(edges, damping=PR_DAMPING, n_iters=PR_ITERS)
     # top-k via orderBy+limit: TakeOrderedAndProject (per-partition
@@ -3871,9 +3858,7 @@ def part_copurchase_pagerank_weighted(
     against the weighted iteration-CTE oracle. Top 50, tie-broken."""
 
     from gdutils_spark.operators.graph import pagerank
-    from gdutils_spark.queries import _utc
 
-    _utc(spark)
     wedges = (
         _copurchase_edges(spark, sf_dir, both_directions=True)
         .groupBy("src", "dst")
@@ -3913,9 +3898,7 @@ def part_copurchase_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the chain as iteration CTEs. Returns every part's final
     community label."""
     from gdutils_spark.operators.graph import label_propagation
-    from gdutils_spark.queries import _utc
 
-    _utc(spark)
     edges = _copurchase_edges(spark, sf_dir, both_directions=True)
     lab = label_propagation(edges, n_iters=LPA_ITERS)
     return lab.select(F.col("node").alias("part"), F.col("label").alias("community"))
@@ -3971,9 +3954,7 @@ def lineitem_hll_order_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         hll_merge,
         hll_registers,
     )
-    from gdutils_spark.queries import _utc
 
-    _utc(spark)
     li = load_table(spark, sf_dir, "lineitem")
     cut_a = F.lit(HLL_OVERLAP_CUT_A).cast("date")
     cut_b = F.lit(HLL_OVERLAP_CUT_B).cast("date")
@@ -4090,9 +4071,7 @@ def orders_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot via anti-join + union — the copy-on-write merge a lakehouse
     format runs internally, as two shuffles on the merge key."""
     from gdutils_spark.operators.cdc import apply_cdc
-    from gdutils_spark.queries import _utc
 
-    _utc(spark)
     o = load_table(spark, sf_dir, "orders")
     k = F.col("o_orderkey")
     dels = o.where(k % 21 == 0).withColumn("op", F.lit("D"))
@@ -4147,9 +4126,7 @@ def user_event_type_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     interval close, event_id tie-broken so the history is well-defined.
     The standard SCD2 ETL, as two window passes over one shuffle."""
     from gdutils_spark.operators.cdc import scd2_history
-    from gdutils_spark.queries import _utc
 
-    _utc(spark)
     e = load_table(spark, sf_dir, "events")
     return scd2_history(
         e, ["user_id"], ["event_type"], "ts", tiebreak_cols=["event_id"]
@@ -4269,9 +4246,7 @@ def event_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         hist_drift_report,
         hist_registers,
     )
-    from gdutils_spark.queries import _utc
 
-    _utc(spark)
     e = load_table(spark, sf_dir, "events")
     # ONE corpus scan builds BOTH cohorts' registers (grouped build +
     # register-sized filters), instead of one filtered scan per cohort;
@@ -4300,9 +4275,7 @@ def event_type_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         hist_drift_report_by_group,
         hist_registers,
     )
-    from gdutils_spark.queries import _utc
 
-    _utc(spark)
     e = load_table(spark, sf_dir, "events")
     regs = hist_registers(
         e.withColumn(
@@ -4462,9 +4435,7 @@ def event_value_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         hist_quantiles,
         hist_registers,
     )
-    from gdutils_spark.queries import _utc
 
-    _utc(spark)
     # NaN measures dropped at entry (r13 null-fixture hunt): the exact
     # percentile grader orders NaN largest in Spark while quantile_cont
     # ignores it — the report's measure policy is NULL-and-NaN-free
@@ -4594,9 +4565,7 @@ def events_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold-order-sensitive; distribution shape lives in the sketch
     queries)."""
     from gdutils_spark.operators.summaries import profile_table
-    from gdutils_spark.queries import _utc
 
-    _utc(spark)
     return profile_table(load_table(spark, sf_dir, "events"))
 
 
@@ -4637,9 +4606,7 @@ def events_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     per bucket are the clustering claim; the whole key computation is
     integer shifts over declared ranges, replayed bit-for-bit in SQL."""
     from gdutils_spark.operators.layout import zorder_layout_stats
-    from gdutils_spark.queries import _utc
 
-    _utc(spark)
     e = load_table(spark, sf_dir, "events").where(
         F.col("user_id").isNotNull() & F.col("value").isNotNull()
     )
@@ -4680,9 +4647,7 @@ def event_type_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exact grouped percentiles ride alongside; every estimate step is
     pinned IEEE, so all groups × quantiles hash-verify."""
     from gdutils_spark.operators.sketches import hist_quantiles, hist_registers
-    from gdutils_spark.queries import _utc
 
-    _utc(spark)
     # NaN-and-NULL-free measure policy (see event_value_quantile_sketch)
     e = load_table(spark, sf_dir, "events").where(
         F.col("value").isNotNull() & ~F.isnan("value")
@@ -4792,9 +4757,7 @@ def event_value_bottomk_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame
         bottomk_quantiles,
         bottomk_sample,
     )
-    from gdutils_spark.queries import _utc
 
-    _utc(spark)
     # NaN-and-NULL-free measure policy (see event_value_quantile_sketch)
     e = load_table(spark, sf_dir, "events").where(
         F.col("value").isNotNull() & ~F.isnan("value")
@@ -5119,9 +5082,8 @@ def customer_rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     on custkey + three windows over the customer-sized aggregate."""
     from pyspark.sql import Window
 
-    from gdutils_spark.queries import _dec, _utc
+    from gdutils_spark.queries import _dec
 
-    _utc(spark)
     # anonymous/undated orders can't be segmented (and a NULL recency
     # would sort NULLS FIRST in Spark's ASC ntile vs NULLS LAST in
     # DuckDB's, shifting every quintile boundary — r13 null-fixture
@@ -5188,9 +5150,6 @@ def event_type_daily_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     variance radicand ``n·Σx² − (Σx)²`` are exact integers, sqrt is
     IEEE-exact, and one final division closes it. Two map-combinable
     aggregates + a type-keyed broadcast join."""
-    from gdutils_spark.queries import _utc
-
-    _utc(spark)
     e = load_table(spark, sf_dir, "events")
     daily = e.groupBy("event_type", F.to_date("ts").alias("day")).agg(
         F.count(F.lit(1)).alias("n_events")
@@ -5392,9 +5351,7 @@ def part_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     division. Top ``TRI_TOP`` parts by (n_triangles desc, part) — a
     deterministic TakeOrderedAndProject cut, no window."""
     from gdutils_spark.operators.graph import triangle_count
-    from gdutils_spark.queries import _utc
 
-    _utc(spark)
     edges = _copurchase_edges(spark, sf_dir, both_directions=False)
     tri = triangle_count(edges)
     return (
@@ -5462,9 +5419,7 @@ def lineitem_kmv_part_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exact counts ride alongside to grade the estimator; one output row,
     every float a single IEEE op on md5-pinned inputs."""
     from gdutils_spark.operators.sketches import kmv_overlap_report
-    from gdutils_spark.queries import _utc
 
-    _utc(spark)
     li = load_table(spark, sf_dir, "lineitem")
     cohort_a = li.where(F.col("l_shipdate") < F.lit(KMV_CUT_A).cast("date"))
     cohort_b = li.where(F.col("l_shipdate") >= F.lit(KMV_CUT_B).cast("date"))
@@ -5540,9 +5495,7 @@ def part_copurchase_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic; the oracle replays every round as iteration CTEs, so a
     converged-vs-not bound can never diverge between engines."""
     from gdutils_spark.operators.graph import k_core
-    from gdutils_spark.queries import _utc
 
-    _utc(spark)
     edges = _copurchase_edges(spark, sf_dir, both_directions=False)
     return k_core(edges, k=KCORE_K, n_iters=KCORE_ITERS).select(
         F.col("node").alias("part"), "core_degree"
@@ -5602,9 +5555,6 @@ def doc_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical semantics cost ~80× fewer join rows. Integer tf vectors
     make the dot product an exact BIGINT and the norms IEEE-exact
     sqrts, so every score hash-verifies with no ordered folds."""
-    from gdutils_spark.queries import _utc
-
-    _utc(spark)
     return dd.cosine_tf_pairs(
         load_table(spark, sf_dir, "documents"),
         threshold=COSINE_T,
@@ -5658,9 +5608,7 @@ def event_value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     == quantile_cont parity carries the medians, every other float op is
     a single IEEE multiply/divide."""
     from gdutils_spark.operators.summaries import mad_outlier_summary
-    from gdutils_spark.queries import _utc
 
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     return mad_outlier_summary(
         ev, "value", "event_type", threshold=MAD_THRESHOLD
@@ -5730,9 +5678,6 @@ def part_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     2^63 (N > ~3·10⁹ baskets against a universal item) where the
     DuckDB oracle raises — at that scale enable ANSI mode or scale the
     counts, the repo's documented wrap-vs-raise trap."""
-    from gdutils_spark.queries import _utc
-
-    _utc(spark)
     items = (
         load_table(spark, sf_dir, "lineitem")
         .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
@@ -5834,9 +5779,6 @@ def user_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     (plan-asserted single Window over the corpus)."""
     from pyspark.sql import Window
 
-    from gdutils_spark.queries import _utc
-
-    _utc(spark)
     # sequence policy (r13 null-fixture hunt): an event without a
     # timestamp has no position in the per-user sequence — and the
     # engines DISAGREE on where it would sort (Spark windows order
@@ -5903,9 +5845,6 @@ def nation_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     once a single supplier exceeds ~3·10⁹ rows (the DuckDB oracle
     raises instead) — at that scale enable ANSI mode or pre-scale the
     counts, the repo's documented wrap-vs-raise trap."""
-    from gdutils_spark.queries import _utc
-
-    _utc(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_suppkey").alias("s")
     )
@@ -6089,9 +6028,7 @@ def event_type_bottomk_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         bottomk_quantiles,
         bottomk_sample,
     )
-    from gdutils_spark.queries import _utc
 
-    _utc(spark)
     # NaN-and-NULL-free measure policy (see event_value_quantile_sketch)
     e = load_table(spark, sf_dir, "events").where(
         F.col("value").isNotNull() & ~F.isnan("value")
@@ -6202,9 +6139,7 @@ def part_copurchase_pagerank_incremental(
     restart iteration) as CTEs, so every rank double is bit-exact.
     Top 50 parts, fully tie-broken."""
     from gdutils_spark.operators.graph import pagerank
-    from gdutils_spark.queries import _utc
 
-    _utc(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
     )
@@ -6321,9 +6256,7 @@ def part_copurchase_triangles_incremental(
         triangle_count,
         triangle_count_incremental,
     )
-    from gdutils_spark.queries import _utc
 
-    _utc(spark)
     li = load_table(spark, sf_dir, "lineitem").where(
         F.col("l_partkey") % 2 == 0
     ).select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
@@ -6371,9 +6304,7 @@ def part_copurchase_communities_incremental(
     convention — this entry simulates BOTH nights, so it pays base LPA
     + the seeded round in one bench row)."""
     from gdutils_spark.operators.graph import label_propagation
-    from gdutils_spark.queries import _utc
 
-    _utc(spark)
     li = load_table(spark, sf_dir, "lineitem").where(
         F.col("l_partkey") % 2 == 0
     ).select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
@@ -7142,9 +7073,7 @@ def part_copurchase_edge_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the edge), top ``EDGE_JAC_TOP`` by (jaccard desc, u, v) —
     a deterministic TakeOrderedAndProject cut."""
     from gdutils_spark.operators.graph import edge_jaccard
-    from gdutils_spark.queries import _utc
 
-    _utc(spark)
     edges = _copurchase_edges(spark, sf_dir, both_directions=False)
     return (
         edge_jaccard(edges)
@@ -8103,9 +8032,6 @@ def event_props_typed_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a number vs carry a non-numeric string (the rows a bare ANSI
     cast would crash the whole scan on). All Catalyst: get_json_object
     + try_cast, one aggregate."""
-    from gdutils_spark.queries import _utc
-
-    _utc(spark)
     e = load_table(spark, sf_dir, "events")
     k_raw = F.get_json_object("props", "$.k")
     k_num = k_raw.try_cast("long")

@@ -16,9 +16,11 @@ machinery, the verified operator is the distributed read/assembly path.
 
 from __future__ import annotations
 
+import atexit
 import json
 import os
 import re
+import shutil
 import tempfile
 
 from collections.abc import Callable
@@ -30,6 +32,7 @@ from pyspark.sql import types as T
 from gdutils_spark.client import GdacClient
 from gdutils_spark.operators.filters import filter_real_time_active
 from gdutils_spark.operators.joins import semi_by_ids
+from gdutils_spark.session import scoped_conf
 from gdutils_spark.sinks.geojson import track_geojson, track_points
 from gdutils_spark.sinks.kml import tracks_to_kml
 from gdutils_spark.sources.csv import read_dataset_csv_batch
@@ -51,38 +54,28 @@ _STREAM_STATE_PARTITIONS = 8
 
 def _state_sized_shuffle(fn):
     """Run a streaming registry query with shuffle partitions sized to
-    its tiny state (see ``_STREAM_STATE_PARTITIONS``), restoring the
-    session conf afterwards. The returned DataFrame is always a batch
-    read-back of the sink directory — a narrow file scan that neither
-    shuffles nor cares about the restored conf."""
+    its tiny state (``_STREAM_STATE_PARTITIONS``) in a ``scoped_conf``.
+    The returned DataFrame is a batch read-back of the sink directory, a
+    narrow file scan that does not depend on the restored conf."""
     import functools
 
     @functools.wraps(fn)
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        old = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(_STREAM_STATE_PARTITIONS)
-        )
-        try:
+        parts = {"spark.sql.shuffle.partitions": str(_STREAM_STATE_PARTITIONS)}
+        with scoped_conf(spark, parts):
             return fn(spark, sf_dir)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
 
     return wrapped
 
 
 def _rt_tmp_root() -> str:
-    """Root for round-trip fixture/checkpoint scratch. tmpfs
-    (``/dev/shm``) when available (r15, guide §6 / VERDICT r14 item 2):
-    the streaming queries' wall time is dominated by availableNow
-    machinery — source parquet write, checkpoint WAL + state-store
-    commits, sink commit, read-back — all many small file operations
-    whose cost on a journaled disk FS is sync latency, not bytes. The
-    data here is ephemeral per-invocation scratch (wiped at the next
-    call), so a memory-backed FS is semantically identical. Production
-    streaming checkpoints need DURABLE storage — that is what
-    ``SPARK_GRAFT_RT_TMPDIR`` parameterizes (point it at the durable
-    scratch volume); the fallback is the ordinary tempdir."""
+    """Root for round-trip fixture/checkpoint scratch: tmpfs
+    (``/dev/shm``) when writable, since the streaming queries' wall time is
+    small-file sync latency (source writes, checkpoint WAL, state-store and
+    sink commits), not bytes. The scratch lives for one invocation, so a
+    memory-backed FS loses nothing. ``SPARK_GRAFT_RT_TMPDIR`` points it
+    elsewhere, e.g. at durable storage for production checkpoints; the
+    fallback is the ordinary tempdir."""
     root = os.environ.get("SPARK_GRAFT_RT_TMPDIR")
     if root:
         return root
@@ -93,16 +86,11 @@ def _rt_tmp_root() -> str:
 
 
 def _work_dir(name: str) -> str:
-    """Deterministic per-query scratch dir under :func:`_rt_tmp_root`,
-    wiped at call START so repeated invocations (driver rounds, bench
-    min-of-3) never accumulate fixture copies. NOT removed on return:
-    the returned DataFrame plan reads these files lazily, so cleanup
-    happens on the next invocation (or tmp reaping)."""
-    import shutil
-
-    d = os.path.join(_rt_tmp_root(), f"gdutils_rt_{name}")
-    shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(d, exist_ok=True)
+    """A fresh ``gdutils_rt_<name>_*`` scratch dir per invocation, so no
+    two runs share or wipe each other's fixtures. The returned plan reads
+    it lazily, so it is removed at interpreter exit, not on return."""
+    d = tempfile.mkdtemp(prefix=f"gdutils_rt_{name}_", dir=_rt_tmp_root())
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
     return d
 
 
@@ -752,12 +740,6 @@ FROM o GROUP BY dataset_id
 # ---------------------------------------------------------------------------
 
 
-def _pin_utc(spark: SparkSession) -> None:
-    # event-time windows bucket by session timezone; pin UTC so window
-    # boundaries match DuckDB's naive-timestamp date_trunc
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-
-
 @_state_sized_shuffle
 def rt_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming P14 driver-verified: events are written to a file
@@ -770,7 +752,6 @@ def rt_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle row."""
     from gdutils_spark.streaming import stream_dedup
 
-    _pin_utc(spark)
     e = (
         load_table(spark, sf_dir, "events")
         .where(F.col("user_id") < 30)
@@ -811,7 +792,6 @@ def rt_stream_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     row set itself would change."""
     from gdutils_spark.streaming import stream_daily_stats
 
-    _pin_utc(spark)
     e = (
         load_table(spark, sf_dir, "events")
         .where(F.col("user_id") < 30)
@@ -865,7 +845,6 @@ def rt_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     emission rule drifted, the row set changes."""
     from gdutils_spark.streaming import stream_sessions
 
-    _pin_utc(spark)
     e = (
         load_table(spark, sf_dir, "events")
         .where(F.col("user_id") < 25)
@@ -943,7 +922,6 @@ def rt_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     (/root/reference/gdutils/__init__.py:591-614)."""
     from gdutils_spark.streaming import stream_entity_summaries
 
-    _pin_utc(spark)
     e = (
         load_table(spark, sf_dir, "events")
         .where(F.col("user_id") < 25)
@@ -1013,7 +991,6 @@ def rt_stream_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     <= max(ts) - 1 day emit; open windows are withheld)."""
     from gdutils_spark.streaming import stream_active_entities
 
-    _pin_utc(spark)
     e = (
         load_table(spark, sf_dir, "events")
         .where(F.col("user_id") < 60)
@@ -1177,7 +1154,6 @@ def rt_stream_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gdutils_spark.queries_ext import _png_media
     from gdutils_spark.streaming import stream_media_features
 
-    _pin_utc(spark)
     media = _png_media(
         load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 200)
     )
@@ -1223,7 +1199,6 @@ def rt_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     or a stale catalog resolution changes the row set."""
     from gdutils_spark.streaming import stream_enrich
 
-    _pin_utc(spark)
     e = (
         load_table(spark, sf_dir, "events")
         .where(F.col("user_id") < 40)
@@ -1457,7 +1432,6 @@ def rt_stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gdutils_spark.queries_ext import HIST_HI, HIST_LO, HIST_NBINS
     from gdutils_spark.streaming import latest_sketch, stream_merge_sketch
 
-    _pin_utc(spark)
     e = load_table(spark, sf_dir, "events").select("event_id", "value")
     tmp = _work_dir("stream_hist")
     src, chk, snap = (os.path.join(tmp, d) for d in ("src", "chk", "snap"))
@@ -1521,7 +1495,6 @@ def rt_stream_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gdutils_spark.queries_ext import WS_K
     from gdutils_spark.streaming import latest_sketch, stream_merge_sketch
 
-    _pin_utc(spark)
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.size(_tokens(F.col("text"))).cast("long").alias("n_tokens"),
@@ -1570,7 +1543,6 @@ def rt_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     modes of stream-stream state management) changes the row set."""
     from gdutils_spark.streaming import stream_stream_join
 
-    _pin_utc(spark)
     e = (
         load_table(spark, sf_dir, "events")
         .where(F.col("user_id") < 60)
@@ -1628,7 +1600,6 @@ def rt_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     null emission all change the row set."""
     from gdutils_spark.streaming import stream_stream_join
 
-    _pin_utc(spark)
     e = (
         load_table(spark, sf_dir, "events")
         .where(F.col("user_id") < 60)
@@ -1690,7 +1661,6 @@ def rt_stream_stream_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     either side changes the row set."""
     from gdutils_spark.streaming import stream_stream_join
 
-    _pin_utc(spark)
     e = (
         load_table(spark, sf_dir, "events")
         .where(F.col("user_id") < 60)
@@ -1834,7 +1804,6 @@ def rt_stream_gap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gdutils_spark.queries_ext import GAP_THR_S
     from gdutils_spark.streaming import latest_sketch, stream_merge_sketch
 
-    _pin_utc(spark)
     e = load_table(spark, sf_dir, "events").select("user_id", "ts")
     tmp = _work_dir("stream_gaps")
     src, chk, snap = (os.path.join(tmp, d) for d in ("src", "chk", "snap"))

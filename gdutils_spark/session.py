@@ -1,4 +1,5 @@
-"""SparkSession factory with scale-aware defaults.
+"""SparkSession factory with scale-aware defaults, and the one owner of
+session conf.
 
 The reference (kerfoot/gdutils) is an eager single-threaded pandas client
 with no execution engine at all; this module is where our engine picks the
@@ -8,37 +9,90 @@ Spark runtime knobs the reference never had:
   at 100 TB the static plan is always wrong somewhere.
 * ``spark.sql.shuffle.partitions`` sized to the local core count for tests;
   on a real cluster AQE coalescing makes the initial number less critical.
-* UTC session timezone — the reference mixes naive and UTC timestamps
-  (``/root/reference/gdutils/apis/status.py:39`` vs
-  ``/root/reference/gdutils/apis/dac.py:44``); we standardize on UTC
-  (SURVEY.md §7 trap 7).
+* The session policy (:data:`POLICY`, below), which every query needs to
+  return the oracle's rows.
 * Arrow enabled for any pandas-interchange path (Pandas UDFs, toPandas).
 * DataFrame debugging off (``spark.python.sql.dataFrameDebugging.enabled
-  =false``). With it on, PySpark 4.1 wraps every ``pyspark.sql.functions``
-  and Column call to record its Python call site: an ``inspect`` stack walk
-  plus several JVM round trips (active-session lookup, JVM class lookup,
-  ``conf.get``, origin set/clear) per call. A short request builds
-  hundreds of Column expressions, so this was most of its Py4J traffic.
-  The trade-off: errors no longer carry the ``== DataFrame ==`` call-site
-  context. They still name the cause, e.g. an unresolved column's
-  ``AnalysisException`` names the column. Callers who want the context
-  pass ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled":
-  "true"}``. PySpark reads this conf once per process, from the first
-  active session that asks, so it must be set when the session is built.
-  Sessions the caller builds itself are not touched.
+  =false``). With it on, PySpark 4.1 records the Python call site of every
+  Column call (a stack walk plus several JVM round trips), most of a short
+  request's Py4J traffic. Errors then lack the ``== DataFrame ==`` call
+  site but still name their cause. PySpark reads the flag once per
+  process, so callers who want call sites pass it in ``extra_conf``.
 * ``local[N]`` with N from ``SPARK_GRAFT_CPUS``, else the CPUs this
   process may run on (``os.sched_getaffinity``).
+
+Session policy (:data:`POLICY`): three runtime SQL confs that change what
+a query returns or how it plans.
+
+* ``session.timeZone=UTC`` — the reference mixes naive and UTC timestamps
+  (``gdutils/apis/status.py:39`` vs ``gdutils/apis/dac.py:44``); the
+  engine standardizes on UTC (SURVEY.md §7 trap 7), so date parts,
+  event-time windows and the loader's NTZ cast match DuckDB's naive
+  timestamps.
+* ``legacy.parquet.nanosAsLong=true`` — a TIMESTAMP(NANOS) column reads as
+  the bigint that ``sources.tables.load_table`` converts; without it Spark
+  refuses the column.
+* ``optimizer.canChangeCachedPlanOutputPartitioning=true`` — AQE may
+  coalesce the near-empty stages after a cached intermediate instead of
+  keeping its shuffle width (minhash_lsh_pairs at sf0.01: 24 s → 2 s).
+
+:func:`get_spark` builds with the policy; :func:`apply_policy` sets it on
+a session the library did not build, once per request at the
+``__spark_entry__`` adapter. Nothing else writes these confs.
+
+:func:`scoped_conf` is the one way to override a conf for one eager step.
+It holds a process-wide lock for the whole scope, so code inside a scope
+must not wait on another thread that enters a scope.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(
     os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
 )
+
+POLICY: dict[str, str] = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+}
+
+_CONF_LOCK = threading.RLock()
+
+
+def apply_policy(spark: SparkSession) -> None:
+    """Set :data:`POLICY` on a session the library did not build."""
+    for k, v in POLICY.items():
+        spark.conf.set(k, v)
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, overrides: dict[str, str]) -> Iterator[None]:
+    """Run the body with ``overrides`` set on ``spark``'s conf, holding one
+    process-wide re-entrant lock from entry to exit; on exit each key gets
+    back its value, or is unset if it had none. Code inside a scope must
+    not wait on another thread that enters a scope (that thread waits on
+    this scope's lock). Scopes nest within one thread.
+    """
+    with _CONF_LOCK:
+        saved = {k: spark.conf.get(k, None) for k in overrides}
+        try:
+            for k, v in overrides.items():
+                spark.conf.set(k, v)
+            yield
+        finally:
+            for k, v in saved.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
 
 
 def get_spark(
@@ -62,7 +116,6 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         # bench/driver sessions compile hundreds of whole-stage-codegen
@@ -74,34 +127,19 @@ def get_spark(
         # per-call stack capture; see the module docstring
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # guide §3.1: allow AQE to rewrite a planned sort-merge join to
-        # shuffled-hash AT RUNTIME when every post-shuffle build
-        # partition measures under 64 MB — the size-gated SHJ mechanism
-        # (runtime stats, not estimates), safe at any scale because the
-        # rewrite only fires on measured small partitions.
-        # ``preferSortMergeJoin`` itself stays at its DEFAULT (true):
-        # r14 set it false, but (a) that path picks SHJ from OPTIMIZER
-        # ESTIMATES (canBuildLocalHashMap: autoBroadcastJoinThreshold ×
-        # shuffle partitions), and an SHJ build side under skew or bad
-        # estimates can exceed the per-partition budget and OOM — SHJ
-        # build does not spill (r14 ADVICE); (b) the r14 full benches
-        # showed consistent q7/q21 regressions under it and the r15
-        # interleaved re-A/B could not reproduce the claimed win
-        # (revert arm measured 0.92× total over the five probe queries
-        # in one session, ~1.07× in another — i.e. noise-floor, not a
-        # win). Estimate-based plan-time SHJ is not worth that risk.
+        # guide §3.1: AQE may turn a sort-merge join into shuffled-hash
+        # at runtime when every measured build partition is under 64 MB.
+        # ``preferSortMergeJoin`` stays true: planning SHJ from optimizer
+        # estimates risks an unspillable build-side OOM under skew, and
+        # its measured gain was within noise.
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
             str(64 * 1024 * 1024),
         )
         # Python data sources (sources/erddap.py) receive Catalyst filters
         .config("spark.sql.python.filterPushdown.enabled", "true")
-        # let AQE re-coalesce stages downstream of cached plans — cached
-        # intermediates otherwise pin their shuffle partitioning and tiny
-        # post-cache stages run at full width (see sources/tables.py)
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**POLICY, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

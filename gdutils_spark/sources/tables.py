@@ -26,6 +26,11 @@ a stale file listing).
   so the memo holds at most one schema per path and conf combination.
 * Directory paths (partitioned or multi-file tables) are never memoized:
   their schema depends on the files inside, so they keep plain inference.
+
+Session conf is read, never written: the UTC zone and ``nanosAsLong`` that
+the timestamp normalization needs come from the session policy
+(:mod:`gdutils_spark.session`), so the load order cannot change the memo
+key of later loads.
 """
 
 from __future__ import annotations
@@ -62,33 +67,13 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 #     ns epochs exceed double's 2^53 mantissa, so no float division)
 #   * timestamp_ntz -> cast('timestamp')  (session tz is UTC, wall-clock
 #     values are preserved and match DuckDB's naive-timestamp semantics)
+# The session policy (``gdutils_spark.session.POLICY``), not this loader,
+# supplies ``nanosAsLong=true`` and the UTC zone that both rely on.
 _TS_COLS: dict[str, tuple[str, ...]] = {
     "events": ("ts",),
     "orders": ("o_orderdate",),
     "lineitem": ("l_shipdate",),
 }
-
-
-def _tune_session(spark: SparkSession) -> None:
-    """Per-query session tuning for driver-owned SparkSessions.
-
-    The correctness/bench driver builds its own session, so engine-level
-    knobs from :mod:`gdutils_spark.session` may be absent; set the ones
-    that change plan shape here (runtime-settable SQL confs only):
-
-    * UTC session timezone — date-part extraction must match DuckDB's
-      naive-timestamp semantics (SURVEY.md §7 trap 7).
-    * ``canChangeCachedPlanOutputPartitioning`` — cached intermediates
-      (shingle tables, LSH candidates) otherwise pin their 32/64-way
-      shuffle partitioning and AQE cannot coalesce the near-empty
-      post-cache stages; measured 24s → 2s on minhash_lsh_pairs at
-      sf0.01 and the same effect holds for any small-per-partition
-      cached stage at cluster scale.
-    """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set(
-        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
-    )
 
 
 # SQL confs whose values change the schema parquet inference produces
@@ -129,12 +114,10 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one testdata table. Scans stay lazy; Catalyst prunes columns."""
-    _tune_session(spark)
+    """Load one testdata table. Scans stay lazy; Catalyst prunes columns.
+    Writes no session conf (see the module docstring)."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     ts_cols = _TS_COLS.get(name, ())
-    if ts_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = _read_parquet(spark, path)
     dtypes = dict(df.dtypes)
     for c in ts_cols:

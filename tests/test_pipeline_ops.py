@@ -1145,10 +1145,8 @@ def test_cohort_retention_invariants_on_events(spark, sf_smoke):
     cohort size (every user is active in their first week), no offset is
     negative, and no offset's actives exceed the cohort size."""
     from gdutils_spark.operators.behavior import cohort_retention
-    from gdutils_spark.queries import _utc
     from gdutils_spark.sources.tables import load_table
 
-    _utc(spark)
     rows = cohort_retention(load_table(spark, sf_smoke, "events")).collect()
     by_cohort = {}
     for r in rows:
@@ -1166,10 +1164,8 @@ def test_cohort_retention_invariants_on_events(spark, sf_smoke):
 def test_funnel_monotone_on_events(spark, sf_smoke):
     """Each funnel step can only lose users relative to the previous."""
     from gdutils_spark.operators.behavior import funnel
-    from gdutils_spark.queries import _utc
     from gdutils_spark.sources.tables import load_table
 
-    _utc(spark)
     rows = sorted(
         funnel(load_table(spark, sf_smoke, "events")).collect(),
         key=lambda r: r["step_index"],

@@ -286,3 +286,22 @@ def test_concurrent_loads_share_one_memo_entry_per_table(spark):
     assert sorted(paths) == sorted(
         os.path.realpath(os.path.join(BENCH_SF, f"{n}.parquet")) for n in names
     )
+
+
+def test_load_table_leaves_session_conf_and_memo_keys_as_found(spark):
+    """Loading every table, in either order, changes no session conf, so
+    the memo ends with the same keys whichever table loads first. A fresh
+    session of the shared context starts from the builder's conf only."""
+    from gdutils_spark.sources import tables
+
+    session = spark.newSession()
+    keys = []
+    for order in (tables.TABLES, tables.TABLES[::-1]):
+        tables._schema_memo.clear()
+        before = session.conf.getAll
+        for name in order:
+            tables.load_table(session, BENCH_SF, name)
+        assert session.conf.getAll == before
+        keys.append(set(tables._schema_memo))
+    assert keys[0] == keys[1]
+    assert len(keys[0]) == len(tables.TABLES)

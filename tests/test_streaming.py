@@ -953,3 +953,48 @@ def test_stream_active_entities_exact_skips_null_entity(spark, tmp_path):
     q.awaitTermination(120)
     got = spark.sql("SELECT * FROM active_exact_null").collect()
     assert len(got) == 1 and got[0]["active_entities"] == 2
+
+
+def test_rt_work_dirs_are_per_invocation(spark, sf_smoke, tmp_path, monkeypatch):
+    """Two calls of one round-trip query get distinct scratch dirs, so the
+    second cannot wipe the fixture the first one's lazy plan still reads."""
+    import os
+
+    from gdutils_spark.queries_rt import rt_csv_batch_daily
+
+    monkeypatch.setenv("SPARK_GRAFT_RT_TMPDIR", str(tmp_path))
+    first = rt_csv_batch_daily(spark, sf_smoke)
+    second = rt_csv_batch_daily(spark, sf_smoke)
+    dirs = os.listdir(tmp_path)
+    assert len(dirs) == 2
+    assert all(d.startswith("gdutils_rt_csv_batch_") for d in dirs)
+    rows = sorted(first.collect())
+    assert rows and rows == sorted(second.collect())
+
+
+_RT_SCRIPT = """
+import os, sys
+from gdutils_spark.queries_rt import rt_csv_batch_daily
+from gdutils_spark.session import get_spark
+spark = get_spark("rt-scratch", cpus=2)
+assert rt_csv_batch_daily(spark, sys.argv[1]).count() > 0
+print(sorted(os.listdir(os.environ["SPARK_GRAFT_RT_TMPDIR"])))
+"""
+
+
+def test_rt_work_dirs_removed_at_exit(sf_smoke, tmp_path):
+    """The round-trip scratch lives as long as the lazy result may read it,
+    and goes at interpreter exit: a finished process leaves none."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_RT_TMPDIR=str(tmp_path))
+    out = subprocess.run(
+        [sys.executable, "-c", _RT_SCRIPT, sf_smoke],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert "gdutils_rt_csv_batch_" in out.stdout.strip().splitlines()[-1]
+    assert os.listdir(tmp_path) == []

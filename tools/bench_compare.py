@@ -14,39 +14,23 @@ import re
 import sys
 
 
-def load_artifact(path: str) -> tuple[dict[str, float], float]:
-    """(per-query timings, host_mode_factor) — factor 1.0 when the
-    artifact predates the r11 anchor protocol."""
-    qs, d = _load_queries_raw(path)
-    factor = 1.0
-    if isinstance(d, dict):
-        for src in (d, d.get("parsed") or {}):
-            if isinstance(src, dict) and "host_mode_factor" in src:
-                factor = float(src["host_mode_factor"])
-                break
-        else:
-            m = re.search(r'"host_mode_factor":\s*([0-9.]+)', d.get("tail", ""))
-            if m:
-                factor = float(m.group(1))
-    return qs, factor
-
-
-def _load_queries_raw(path: str) -> tuple[dict[str, float], dict]:
+def load_queries(path: str) -> dict[str, float]:
+    """Per-query timings of one artifact."""
     raw = open(path).read()
     try:
         d = json.loads(raw)
     except json.JSONDecodeError:
         d = json.loads(raw.strip().splitlines()[-1])
     if "queries" in d:
-        return d["queries"], d
+        return d["queries"]
     if isinstance(d.get("parsed"), dict) and "queries" in d["parsed"]:
-        return d["parsed"]["queries"], d
+        return d["parsed"]["queries"]
     # driver wrapper: the bench line is embedded in the "tail" string
     m = re.search(r'\{"(?:metric|queries)".*', d.get("tail", ""))
     if m:
         try:
             line = json.loads(m.group(0).rstrip("\\n").rstrip())
-            return line["queries"], d
+            return line["queries"]
         except (json.JSONDecodeError, KeyError):
             pass
     # tail may be FRONT-truncated (the driver keeps only the last ~2 KB):
@@ -61,42 +45,31 @@ def _load_queries_raw(path: str) -> tuple[dict[str, float], dict]:
     }
     if not out:
         raise SystemExit(f"{path}: no bench line found")
-    return out, d
+    return out
 
 
 def main() -> None:
     old_p, new_p = sys.argv[1], sys.argv[2]
     thresh = float(sys.argv[3]) if len(sys.argv) > 3 else 1.25
-    (old, f_old), (new, f_new) = load_artifact(old_p), load_artifact(new_p)
-    # anchor normalization: each artifact's host_mode_factor scales its
-    # timings back to the fixed r10 fast-mode reference, so cross-round
-    # ratios compare OPERATORS, not which speed mode the host was in
-    norm = f_old / f_new
+    old, new = load_queries(old_p), load_queries(new_p)
     common = sorted(set(old) & set(new))
     t_old = sum(old[q] for q in common)
     t_new = sum(new[q] for q in common)
     print(
         f"common queries: {len(common)}  old={t_old:.1f}s  new={t_new:.1f}s"
-        f"  raw ratio={t_new / t_old:.2f}x"
-        f"  host factors {f_old:.2f}->{f_new:.2f}"
-        f"  normalized={t_new / t_old * norm:.2f}x"
+        f"  ratio={t_new / t_old:.2f}x"
     )
     only_new = sorted(set(new) - set(old))
     if only_new:
         extra = sum(new[q] for q in only_new)
         print(f"new-only: {len(only_new)} queries, {extra:.1f}s")
     regressions = [
-        (new[q] / old[q] * norm, q)
-        for q in common
-        if new[q] / old[q] * norm > thresh
+        (new[q] / old[q], q) for q in common if new[q] / old[q] > thresh
     ]
     for r, q in sorted(regressions, reverse=True):
-        print(
-            f"  REGRESSION {r:.2f}x (normalized)  {q}: "
-            f"{old[q]:.3f} -> {new[q]:.3f}"
-        )
+        print(f"  REGRESSION {r:.2f}x  {q}: {old[q]:.3f} -> {new[q]:.3f}")
     if not regressions:
-        print(f"no regressions above {thresh}x (normalized)")
+        print(f"no regressions above {thresh}x")
 
 
 if __name__ == "__main__":

@@ -40,10 +40,13 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    from gdutils_spark.queries import QUERIES
+    import __spark_entry__ as se
 
-    names = sys.argv[1:] or sorted(QUERIES)
-    unknown = [n for n in names if n not in QUERIES]
+    # the driver adapter applies the session policy (UTC, nanosAsLong,
+    # re-coalescable cached plans) that the queries need
+    queries = se.queries()
+    names = sys.argv[1:] or sorted(queries)
+    unknown = [n for n in names if n not in queries]
     if unknown:
         raise SystemExit(f"unknown queries: {unknown}")
 
@@ -52,7 +55,7 @@ def main() -> None:
     for name in names:
         spark.catalog.clearCache()
         try:
-            QUERIES[name](spark, SF_DIR).collect()
+            queries[name](spark, SF_DIR).collect()
         except Exception as exc:
             print(f"warn {name}: raised {type(exc).__name__}: {exc}", flush=True)
             continue

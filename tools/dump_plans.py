@@ -96,8 +96,11 @@ def main() -> None:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
+    import __spark_entry__ as se
     from gdutils_spark.plans import formatted_plan
-    from gdutils_spark.queries import QUERIES
+
+    # through the driver adapter, which applies the session policy
+    queries = se.queries()
 
     out = [
         "# PLANS — formatted physical plans of the headline queries",
@@ -109,7 +112,7 @@ def main() -> None:
         "",
     ]
     for name, claim in HEADLINERS:
-        plan = trim(formatted_plan(QUERIES[name](spark, SF_DIR)))
+        plan = trim(formatted_plan(queries[name](spark, SF_DIR)))
         out += [f"## {name}", "", f"*{claim}*", "", "```", plan, "```", ""]
     with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
         f.write("\n".join(out))
