@@ -299,7 +299,8 @@ def pagerank(
 
 
 def _fits(df: DataFrame, bound: int) -> bool:
-    """Broadcast-gate probe: does ``df`` hold at most ``bound`` rows?
+    """Size-gate probe (the broadcast gates, k_core's one-task gate):
+    does ``df`` hold at most ``bound`` rows?
     ``limit(bound+1).count()`` instead of a full ``count()`` (r15,
     VERDICT r14 item 6): the scan short-circuits once ``bound + 1`` rows
     are seen, so the 100 TB no-broadcast path pays O(bound) to learn
@@ -333,8 +334,8 @@ def _pinned_partitioned(
 
 def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """Undirected canonical edge set: (least, greatest) pairs, self-loops
-    dropped, deduped — shared by the batch and incremental triangle
-    counters so the canonicalization can never drift between them."""
+    dropped, deduped — shared by the triangle counters, edge_jaccard and
+    k_core so the canonicalization can never drift between them."""
     return (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("u"),
@@ -684,13 +685,58 @@ def edge_jaccard(
     )
 
 
+# Edge-count bound of k_core's one-task peel (measured; see k_core).
+_ONE_TASK_MAX_EDGES = 4_000_000
+
+
+def _kcore_peel(k: int, n_iters: int):
+    """The ``mapInPandas`` body of k_core's one-task path: the whole
+    fixed-iteration peel over ONE partition's canonical edges, in numpy.
+    Captures only ``k`` and ``n_iters``; node ids keep their own dtype
+    (``np.unique`` orders strings and int32 alike)."""
+
+    def peel(batches):
+        import numpy as np
+        import pandas as pd
+
+        frames = [f for f in batches if len(f)]
+        if not frames:
+            return
+        m = sum(len(f) for f in frames)
+        nodes, inv = np.unique(
+            np.concatenate(
+                [f["u"].to_numpy() for f in frames]
+                + [f["v"].to_numpy() for f in frames]
+            ),
+            return_inverse=True,
+        )
+        del frames
+        iu, iv = inv[:m], inv[m:]
+        alive = np.ones(m, dtype=bool)
+
+        def degree():
+            n = len(nodes)
+            return np.bincount(iu[alive], minlength=n) + np.bincount(
+                iv[alive], minlength=n
+            )
+
+        for _ in range(n_iters):
+            keep = degree() >= k
+            alive &= keep[iu] & keep[iv]
+        deg = degree()
+        yield pd.DataFrame(
+            {"node": nodes[deg > 0], "core_degree": deg[deg > 0].astype("int64")}
+        )
+
+    return peel
+
+
 def k_core(
     edges: DataFrame,
     k: int,
     src: str = "src",
     dst: str = "dst",
     n_iters: int = 4,
-    broadcast_max_nodes: int | None = 8_000_000,
 ) -> DataFrame:
     """Bounded-iteration k-core peel (Seidman 1983, "Network structure
     and minimum degree"): repeatedly drop nodes whose CURRENT degree is
@@ -698,9 +744,9 @@ def k_core(
     maximal subgraph of minimum degree ≥ k, the standard robustness/
     nucleus filter next to :func:`triangle_count`'s cohesion and
     :func:`pagerank`'s importance. Directions in the input are ignored
-    (edges canonicalized + deduped). Returns ``(node, core_degree)``
-    for the surviving nodes — ``core_degree`` is the degree INSIDE the
-    surviving subgraph.
+    (edges canonicalized + deduped, :func:`_canonical_edges`). Returns
+    ``(node, core_degree)`` for the surviving nodes — ``core_degree`` is
+    the degree INSIDE the surviving subgraph.
 
     Fixed iteration count, not convergence detection — the oracle-
     replayable discipline of the whole module (:func:`pagerank`): a
@@ -709,33 +755,36 @@ def k_core(
     returns a (documented) superset of the true core — check
     ``min(core_degree) >= k`` to certify convergence (test-pinned; peels
     on real graphs converge in a handful of rounds because each round
-    removes whole frontier layers). One gate covers every round
-    (survivors only shrink): while the FIRST round's survivor count
-    stays at or below ``broadcast_max_nodes``, the loop state is the
-    node-sized survivor set itself (r15, guide §2.4) — the both-ways
-    incidence relation is hash-partitioned by node and pinned ONCE, each
-    round filters it with two broadcast semi-joins and re-counts degrees
-    with NO shuffle Exchange (the aggregate groups on the pinned key),
-    and only the survivor set is ``localCheckpoint``-pinned per round
-    (it has two consumers — the node-side and other-side probes: the
-    no-subtree-reuse discipline). Above the gate the loop keeps the
-    shrinking EDGE list as state (keyed-shuffle semi-joins, edge pin per
-    round) — when survivors don't fit a broadcast, shrinking state beats
-    re-filtering the full corpus every round. Identical surviving rows
-    on both paths (differential-tested)."""
+    removes whole frontier layers). ``n_iters=0`` is the degree table.
+
+    Two paths, identical rows (differential-tested), chosen by one
+    bounded count of the pinned canonical edge list (:func:`_fits`):
+
+    * at most ``_ONE_TASK_MAX_EDGES`` edges: the whole peel runs in ONE
+      task (``coalesce(1).mapInPandas``, :func:`_kcore_peel`) — ids
+      factorized by ``np.unique``, each round one ``bincount`` per
+      endpoint and an alive-edge mask. Under AQE every round of the
+      shuffle path below runs its Exchange as a job while the plan is
+      still being built; this path's eager jobs are the checkpointed
+      canonical-edge stages plus the one gate probe, and the peel
+      itself is the collect's single job.
+    * above it: the shrinking-edge-state loop — each round's edge list
+      is keyed-shuffled against the survivor set and pinned, the only
+      shape that is safe at scale.
+
+    The bound was measured on a 4-core host with synthetic random
+    graphs of the co-purchase graph's density (``perf/README.md``,
+    "k-core one-task peel"): the one-task path was the faster one at
+    every size measured, 125,000 to 4,000,000 edges (9.4 s against
+    19.5 s at 4M), and at 4M its Python worker peaked at 0.56 GB
+    resident, against a 1 GB per-worker budget. The sf0.1 co-purchase
+    graph (1.2M edges) sits under it.
+    """
     if k < 1:
         raise ValueError("k must be >= 1")
     if n_iters < 0:
         raise ValueError("n_iters must be >= 0")
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = _canonical_edges(edges, src, dst).localCheckpoint(eager=False)
 
     def degrees(edge_df: DataFrame) -> DataFrame:
         return (
@@ -745,73 +794,18 @@ def k_core(
             .agg(F.count(F.lit(1)).alias("core_degree"))
         )
 
-    # Deliberate join strategy (guide §3.1, the pagerank convention):
-    # the survivor set is node-sized and only SHRINKS round over round,
-    # so one bounded count of the first round's survivors gates every
-    # round (identical surviving rows on both paths).
     if n_iters == 0:
         return degrees(e)
-    keep = (
-        degrees(e)
-        .where(F.col("core_degree") >= k)
-        .select("node")
-        .localCheckpoint(eager=False)
-    )
-    if broadcast_max_nodes is not None and _fits(keep, broadcast_max_nodes):
-        # Broadcast path, restructured r15 (guide §2.4): the loop state
-        # is the NODE-sized survivor set, not the shrinking edge list.
-        # Survivor sets are nested (S_{i+1} ⊆ S_i), so the round-i
-        # subgraph equals e ∩ S_i×S_i — filtering the ONE pinned
-        # incidence relation against the current survivors is exactly
-        # the old edge-shrinking loop, row for row. The incidence
-        # relation (both directions of every edge, keyed by the counted
-        # endpoint) is hash-partitioned by ``node`` and pinned ONCE, so
-        # each round's degree aggregate groups on the pinned key and
-        # plans with ZERO shuffle Exchange; both survivor probes are
-        # broadcast semi-joins (map-side). Per round this replaces an
-        # edge-sized localCheckpoint + a keyed aggregate exchange with
-        # one node-sized pin and no exchange at all.
-        inc = _pinned_partitioned(
-            e.select(F.col("u").alias("node"), F.col("v").alias("other"))
-            .unionByName(
-                e.select(F.col("v").alias("node"), F.col("u").alias("other"))
-            ),
-            "node",
+    if _fits(e, _ONE_TASK_MAX_EDGES):
+        schema = degrees(e).schema
+        return e.coalesce(1).mapInPandas(_kcore_peel(k, n_iters), schema)
+    for _ in range(n_iters):
+        keep = (
+            degrees(e)
+            .where(F.col("core_degree") >= k)
+            .select("node")
+            .localCheckpoint(eager=False)
         )
-
-        def surv_degrees(s: DataFrame) -> DataFrame:
-            return (
-                inc.join(F.broadcast(s), "node", "left_semi")
-                .join(
-                    F.broadcast(s.select(F.col("node").alias("other"))),
-                    "other",
-                    "left_semi",
-                )
-                .groupBy("node")
-                .agg(F.count(F.lit(1)).alias("core_degree"))
-            )
-
-        for _ in range(n_iters - 1):
-            keep = (
-                surv_degrees(keep)
-                .where(F.col("core_degree") >= k)
-                .select("node")
-                .localCheckpoint(eager=False)
-            )
-        return surv_degrees(keep)
-    # Above the gate: the shrinking-edge-state loop — each round's edge
-    # list is keyed-shuffled against the survivor set and pinned, the
-    # scale shape when the survivor set itself is too big to broadcast
-    # (state shrinks with the peel instead of re-filtering the full
-    # corpus every round).
-    for i in range(n_iters):
-        if i > 0:
-            keep = (
-                degrees(e)
-                .where(F.col("core_degree") >= k)
-                .select("node")
-                .localCheckpoint(eager=False)
-            )
         e = (
             e.join(keep.select(F.col("node").alias("u")), "u", "left_semi")
             .join(keep.select(F.col("node").alias("v")), "v", "left_semi")

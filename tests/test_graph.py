@@ -707,18 +707,12 @@ def test_edge_jaccard_consistent_with_triangle_count(spark):
 
 
 def test_broadcast_gate_paths_row_identical(spark):
-    """r15 differential pin: the broadcast-gated loop bodies (partition-
-    pinned edge relation; k_core additionally restructured to node-sized
-    survivor-set state) must emit EXACTLY the rows of the gate-off
-    shuffle path — including an unconverged k_core bound (the documented
-    superset contract) and a single-round peel."""
+    """r15 differential pin: the broadcast-gated loop bodies of
+    label_propagation and pagerank (partition-pinned edge relation) must
+    emit EXACTLY the rows of the gate-off shuffle path."""
     import random
 
-    from gdutils_spark.operators.graph import (
-        k_core,
-        label_propagation,
-        pagerank,
-    )
+    from gdutils_spark.operators.graph import label_propagation
 
     rng = random.Random(97)
     edge_list = [(a, b) for a in range(6) for b in range(a + 1, 6)]
@@ -727,19 +721,6 @@ def test_broadcast_gate_paths_row_identical(spark):
     edge_list = [(s, t) for s, t in edge_list if s != t]
     df = spark.createDataFrame(edge_list, "src long, dst long")
     both = df.union(df.selectExpr("dst AS src", "src AS dst"))
-
-    for k, iters in ((3, 8), (3, 1), (4, 2)):
-        on = {
-            r.node: r.core_degree
-            for r in k_core(df, k=k, n_iters=iters).collect()
-        }
-        off = {
-            r.node: r.core_degree
-            for r in k_core(
-                df, k=k, n_iters=iters, broadcast_max_nodes=None
-            ).collect()
-        }
-        assert on == off, f"k_core gate paths diverge at k={k}, iters={iters}"
 
     lab_on = {r.node: r.label for r in label_propagation(both, n_iters=3).collect()}
     lab_off = {
@@ -756,3 +737,77 @@ def test_broadcast_gate_paths_row_identical(spark):
         for r in pagerank(both, n_iters=3, broadcast_max_nodes=None).collect()
     }
     assert pr_on == pr_off  # bit-identical doubles: same ordered fold
+
+
+def _kcore_edges(spark, id_type: str):
+    """Clique + path tail + random fringe, plus every input the
+    canonicalization must absorb: self-loops, duplicated and reversed
+    edges, and null endpoints."""
+    import random
+
+    rng = random.Random(97)
+    edge_list = [(a, b) for a in range(6) for b in range(a + 1, 6)]
+    edge_list += [(5 + i, 6 + i) for i in range(8)]
+    edge_list += sorted({(rng.randrange(16), rng.randrange(16)) for _ in range(25)})
+    edge_list += [(3, 3), (2, 1), (1, 2), (1, 2), (None, 4), (4, None), (None, None)]
+    if id_type == "string":
+        edge_list = [
+            tuple(None if x is None else f"n{x:02d}" for x in e) for e in edge_list
+        ]
+    return spark.createDataFrame(edge_list, f"src {id_type}, dst {id_type}")
+
+
+@pytest.mark.parametrize("id_type", ["long", "int", "string"])
+def test_k_core_one_task_matches_shuffle_path(spark, monkeypatch, id_type):
+    """The one-task numpy peel and the shuffle loop (forced by a bound
+    no edge count fits, so empty input takes it too) return the same
+    rows, schema and pandas dtypes — converged, unconverged (the
+    documented superset), ``n_iters=0``, ``k`` above every degree, and
+    empty input."""
+    from gdutils_spark.operators import graph
+
+    df = _kcore_edges(spark, id_type)
+    empty = spark.createDataFrame([], df.schema)
+    cases = [(df, 3, 8), (df, 3, 1), (df, 4, 0), (df, 99, 3), (empty, 2, 3)]
+
+    def run(edges, k, iters):
+        out = graph.k_core(edges, k=k, n_iters=iters)
+        plan = out._jdf.queryExecution().analyzed().toString()
+        return out, "MapInPandas" in plan, out.toPandas()
+
+    one = [run(*c) for c in cases]
+    monkeypatch.setattr(graph, "_ONE_TASK_MAX_EDGES", -1)
+    shuf = [run(*c) for c in cases]
+    for (edges, k, iters), (a, a_map, pa), (b, b_map, pb) in zip(cases, one, shuf):
+        where = f"{id_type} k={k} iters={iters} rows={edges.count()}"
+        assert a_map == (iters > 0) and not b_map, where
+        assert a.schema == b.schema, where
+        assert pa.dtypes.tolist() == pb.dtypes.tolist(), where
+        assert pa.sort_values("node", ignore_index=True).equals(
+            pb.sort_values("node", ignore_index=True)
+        ), where
+    # the fixture exercises a non-empty core, a strict unconverged
+    # superset and the empty results
+    sizes = [len(p) for _, _, p in one]
+    assert sizes[0] > 0 and sizes[1] > sizes[0] and sizes[3] == sizes[4] == 0
+
+
+def test_part_copurchase_kcore_warm_jobs(spark, sf_correct):
+    """A warm ``part_copurchase_kcore`` at sf0.01 starts at most 5 jobs,
+    at most 4 of them while the plan is built: the checkpointed
+    canonical-edge stages and the one gate probe; the one-task peel is
+    the collect's job. The per-round shuffle loop started 19 (16)."""
+    from gdutils_spark.queries import QUERIES
+
+    def next_job_id() -> int:
+        return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+    q = QUERIES["part_copurchase_kcore"]
+    q(spark, sf_correct).toPandas()  # cold: schema inference, JIT
+    j0 = next_job_id()
+    out = q(spark, sf_correct)
+    j1 = next_job_id()
+    out.toPandas()
+    j2 = next_job_id()
+    assert j1 - j0 <= 4
+    assert j2 - j0 <= 5

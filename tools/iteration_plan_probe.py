@@ -19,6 +19,10 @@ operator:
 Inputs are the SAME copurchase edge builder and constants the registry
 queries use, so the dumped shapes are the queries' shapes.
 
+k_core has no broadcast gate (a bounded edge count picks a one-task
+peel or the shuffle loop), so it is not probed here; the committed
+``plans/r14/*kcore*`` dumps are the old gated shapes.
+
 Usage: ``python tools/iteration_plan_probe.py`` (writes
 ``plans/r14/<name>_iterbody_{before,after}.txt``).
 """
@@ -87,15 +91,12 @@ def _dump(df, name: str, tag: str) -> None:
 def main() -> None:
     spark = get_spark("gdutils-iterplan-probe")
     from gdutils_spark.operators.graph import (
-        k_core,
         label_propagation,
         pagerank,
         triangle_count,
     )
     from gdutils_spark.queries_ext import (
         _copurchase_edges,
-        KCORE_ITERS,
-        KCORE_K,
         LPA_ITERS,
         PR_DAMPING,
         PR_ITERS,
@@ -144,18 +145,6 @@ def main() -> None:
             "part_copurchase_communities",
             lambda gate: label_propagation(
                 both, n_iters=LPA_ITERS, broadcast_max_nodes=gate
-            ),
-            8_000_000,
-        ),
-        (
-            # ONE iteration body only: each k-core round references the
-            # previous edge set 5x (degrees union + two semi-join probes),
-            # so the fully unrolled KCORE_ITERS lineage is 5^n copies of
-            # the base (~200 MB of text at n=4). One body is exactly the
-            # unit the broadcast gate changes; every round has this shape.
-            "part_copurchase_kcore",
-            lambda gate: k_core(
-                half, k=KCORE_K, n_iters=1, broadcast_max_nodes=gate
             ),
             8_000_000,
         ),
