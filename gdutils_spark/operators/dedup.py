@@ -21,7 +21,7 @@ Designed for 100 TB document corpora:
   shuffle-partitioned, no all-pairs blowup.
 * **SimHash**: 60-bit sign-aggregated fingerprint (60 conditional-sum
   aggregates in one groupBy); near-pairs = hamming(xor) <= d, candidates
-  found by banding the fingerprint into 4×15-bit chunks (a hamming-<=3 pair
+  found by banding the fingerprint into d+1 chunks (a hamming-<=d pair
   agrees exactly on >= 1 chunk... pigeonhole), verified by bit_count.
 
 Everything is Catalyst expressions; no Python UDFs.
@@ -734,7 +734,11 @@ def connected_components(
     don't grow with iteration count. Convergence is detected by the sum
     of labels (monotonically non-increasing, integer-exact in
     decimal(38,0)) reaching a fixpoint — one cheap aggregate per round
-    instead of a change-count join.
+    instead of a change-count join. ``max_iter`` counts rounds including
+    the one that confirms the fixpoint (so a component of diameter D
+    needs ``max_iter >= D + 1``); both algorithms raise ``RuntimeError``
+    when it is hit without one, so callers never silently get partial
+    clusters.
 
     ``algorithm="star"`` switches to alternating large-star/small-star
     (Kiveris et al., *Connected Components in MapReduce and Beyond*,
@@ -793,6 +797,7 @@ def connected_components(
     else:
         chk = F.xxhash64("comp").cast("decimal(38,0)")
     prev: object = None
+    converged = False
     with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(loop_parts)}):
         for _ in range(max_iter):
             prop = sym.join(labels, sym["a"] == labels["node"]).select(
@@ -808,9 +813,12 @@ def connected_components(
             )
             total = labels.agg(F.sum(chk).alias("s")).collect()[0]["s"]
             if total == prev:
+                converged = True
                 break
             prev = total
     sym.unpersist()
+    if not converged:
+        raise RuntimeError(f"hash-min did not converge in {max_iter} rounds")
     return labels.select("node", "comp")
 
 
@@ -948,14 +956,21 @@ def simhash_near_pairs(
     id_col: str = "doc_id",
     max_hamming: int = 3,
     bits: int = SIMHASH_BITS,
-    chunks: int = 4,
 ) -> DataFrame:
     """Near-dup pairs by SimHash hamming distance, found via chunk banding.
 
-    Pigeonhole: hamming <= chunks-1 guarantees at least one identical
-    chunk, so the candidate join on (chunk_idx, chunk_value) is exact for
-    max_hamming <= chunks-1 and a recall-complete prefilter otherwise.
+    The fingerprint is cut into ``max_hamming + 1`` disjoint chunks of
+    ``bits // (max_hamming + 1)`` bits (leftover high bits sit in none).
+    Pigeonhole: a pair within ``max_hamming`` differs in at most
+    ``max_hamming`` chunks, so at least one chunk is identical and the
+    candidate join on (chunk_idx, chunk_value) misses no pair; bit_count
+    then verifies each candidate exactly. The default 3 gives 4×15-bit
+    chunks; larger distances give more, narrower chunks and more
+    candidates.
     """
+    if not 0 <= max_hamming < bits:
+        raise ValueError(f"max_hamming must be in [0, {bits}), got {max_hamming}")
+    chunks = max_hamming + 1
     width = bits // chunks
     mask = (1 << width) - 1
     # one fingerprint row per doc feeds both self-join sides; pin it

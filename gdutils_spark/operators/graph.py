@@ -31,6 +31,14 @@ from pyspark.sql import functions as F
 
 from gdutils_spark.session import scoped_conf
 
+# Broadcast-gate bounds (r14, guide §3.1). Budget honestly: a built
+# BroadcastHashJoin relation costs ~40-80 bytes/row (UnsafeRow +
+# LongToUnsafeRowMap arrays), so 8M nodes is a ~0.3-0.6 GB broadcast,
+# sized for the 24g driver it was measured on. The edge bound gates the
+# wedge family, whose broadcast side is the oriented edge list.
+_BROADCAST_MAX_NODES = 8_000_000
+_BROADCAST_MAX_EDGES = 4_000_000
+
 
 def pagerank(
     edges: DataFrame,
@@ -42,7 +50,6 @@ def pagerank(
     weight: str | None = None,
     validate: bool = True,
     start_ranks: DataFrame | None = None,
-    broadcast_max_nodes: int | None = 8_000_000,
 ) -> DataFrame:
     """PageRank over a DIRECTED edge list (pass both directions for an
     undirected graph) — ``(node, pr)`` after ``n_iters`` power
@@ -60,7 +67,7 @@ def pagerank(
     instead of re-deriving the whole chain. The join strategy is picked
     DELIBERATELY (r14, guide §3.1): the rank/degree side is node-sized
     and known — ``n`` is already computed for the teleport term — so
-    when ``n <= broadcast_max_nodes`` the rank vector and degree table
+    when ``n <= _BROADCAST_MAX_NODES`` the rank vector and degree table
     BROADCAST into the join and the (much larger) edge list is never
     exchanged after its initial checkpoint; above the threshold the
     join falls back to the shuffle path (measured r14 at sf0.1: each
@@ -108,26 +115,17 @@ def pagerank(
     under ``validate=True`` (they would double-count that node's
     contributions in every iteration).
 
-    ``broadcast_max_nodes``: broadcast the rank/degree side of the
-    per-iteration join while the node count stays at or below this
-    bound. Budget honestly (r14 ADVICE): a built BroadcastHashJoin
-    relation costs ~40-80 bytes/row (UnsafeRow + LongToUnsafeRowMap
-    arrays), so the default 8M nodes is a ~0.3-0.6 GB broadcast —
-    rebuilt for the rank vector and the sums every iteration. That fits
-    the 24g driver this was measured on; size it DOWN (e.g. 2M) for
-    modest executors/drivers on a real cluster, or ``None`` to force
-    the shuffle path. Beyond the bound every join shuffles. EAGERNESS
-    NOTE: with the gate enabled (and for ``weight=``/``start_ranks=``
-    validation) this operator launches Spark jobs at CONSTRUCTION time
-    — the gate reads the node count via ``n_df.first()`` (one pass over
-    the pinned node relation, itself derived from a full edge scan) —
-    rather than staying fully lazy until the caller's first action.
-    When the gate passes, one more construction-time job eagerly pins
-    the EDGE list by ``dst`` (``_pinned_partitioned``): an edge-sized,
-    not node-sized, row-format ``localCheckpoint`` that spills but is
-    lost with its executor. For edge lists too large for that, pass
-    ``broadcast_max_nodes=None`` (no pin), or stage the edges as parquet
-    first (the ``stage_path`` convention of ``similarity.ivfpq_index``).
+    EAGERNESS NOTE: with ``n_iters > 0`` (and for ``weight=``/
+    ``start_ranks=`` validation) this operator launches Spark jobs at
+    CONSTRUCTION time — the gate reads the node count via
+    ``n_df.first()`` (one pass over the pinned node relation, itself
+    derived from a full edge scan) — rather than staying fully lazy
+    until the caller's first action. When the gate passes, one more
+    construction-time job eagerly pins the EDGE list by ``dst``
+    (``_pinned_partitioned``): an edge-sized, not node-sized, row-format
+    ``localCheckpoint`` that spills but is lost with its executor. For
+    edge lists too large for that, stage the edges as parquet first
+    (the ``stage_path`` convention of ``similarity.ivfpq_index``).
     """
     if n_iters < 0:
         raise ValueError("n_iters must be >= 0")
@@ -235,11 +233,8 @@ def pagerank(
     # to the edge partitions instead of exchanging + sorting the edge
     # list every iteration (identical rows either way; only the
     # physical plan changes, so the oracle replay is unaffected).
-    if broadcast_max_nodes is not None and n_iters > 0:
-        bcast = n_df.first()["n"] <= int(broadcast_max_nodes)
-    else:
-        bcast = False
-    hint = F.broadcast if bcast else (lambda df: df)
+    bcast = n_iters > 0 and n_df.first()["n"] <= _BROADCAST_MAX_NODES
+    hint = _hint(bcast)
     if bcast:
         # guide §2.4 (r15): ONE up-front hash exchange of the pinned
         # edge list by dst replaces every iteration's aggregate
@@ -298,6 +293,12 @@ def pagerank(
     return pr
 
 
+def _hint(bcast: bool):
+    """The join hint a broadcast gate hands its joins: ``F.broadcast``
+    when the gate passed, else the identity (AQE picks the join)."""
+    return F.broadcast if bcast else (lambda df: df)
+
+
 def _fits(df: DataFrame, bound: int) -> bool:
     """Size-gate probe (the broadcast gates, k_core's one-task gate):
     does ``df`` hold at most ``bound`` rows?
@@ -346,21 +347,20 @@ def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
     )
 
 
-def _degree_oriented(e: DataFrame, hint=None) -> "tuple[DataFrame, DataFrame]":
+def _degree_oriented(e: DataFrame, hint) -> "tuple[DataFrame, DataFrame]":
     """(degree table, degree-ordered oriented edges) from a canonical
     edge relation ``(u, v[, extras...])`` — every edge points from the
     smaller ``(degree, id)`` endpoint to the larger (the Suri &
     Vassilvitskii orientation); extra columns ride through. ONE source
     of truth for the parity-critical orientation/tie-break logic, shared
-    by :func:`triangle_count` and :func:`triangle_count_incremental`
-    (a drift between their copies would silently break the pinned
-    incremental == rebuild claim). Both outputs localCheckpoint-pinned
-    (multi-consumer, no-subtree-reuse discipline). ``hint`` (the r14
-    guide-§3.1 convention): callers that measured the graph small pass
-    ``F.broadcast`` so the node-sized degree table broadcasts into both
-    orientation joins and the edge list never shuffles here."""
+    with :func:`_wedges` by the whole wedge family (a drift between
+    copies would silently break the pinned incremental == rebuild
+    claim). Both outputs localCheckpoint-pinned (multi-consumer,
+    no-subtree-reuse discipline). ``hint`` (:func:`_hint`): callers
+    whose gate measured the graph small pass ``F.broadcast`` so the
+    node-sized degree table broadcasts into both orientation joins and
+    the edge list never shuffles here."""
     extras = [c for c in e.columns if c not in ("u", "v")]
-    hint = hint or (lambda df: df)
     deg = (
         e.select(F.col("u").alias("node"))
         .unionByName(e.select(F.col("v").alias("node")))
@@ -387,17 +387,37 @@ def _degree_oriented(e: DataFrame, hint=None) -> "tuple[DataFrame, DataFrame]":
     return deg, oriented
 
 
-def _rank_lt(l: str, r: str):
-    """Wedge rank order between two oriented-edge aliases: compare their
-    b-endpoints by the SAME (degree, id) order the orientation uses —
-    so the closing edge (x, y), if present, is oriented exactly x→y."""
-    return (F.col(f"{l}.db") < F.col(f"{r}.db")) | (
-        (F.col(f"{l}.db") == F.col(f"{r}.db"))
-        & (F.col(f"{l}.b") < F.col(f"{r}.b"))
+def _wedges(left: DataFrame, right: DataFrame, hint) -> DataFrame:
+    """Degree-ordered wedges ``(c, x, y)``: an oriented edge c→x of
+    ``left`` and c→y of ``right`` sharing their center, with x before y
+    in the SAME (degree, id) order the orientation uses — so the
+    closing edge (x, y), if present, is oriented exactly x→y and each
+    triangle is generated once (:func:`_closed`). ``hint`` goes on
+    ``right``."""
+    o1, o2 = left.alias("o1"), right.alias("o2")
+    x_before_y = (F.col("o1.db") < F.col("o2.db")) | (
+        (F.col("o1.db") == F.col("o2.db")) & (F.col("o1.b") < F.col("o2.b"))
+    )
+    return o1.join(
+        hint(o2), (F.col("o1.a") == F.col("o2.a")) & x_before_y
+    ).select(
+        F.col("o1.a").alias("c"),
+        F.col("o1.b").alias("x"),
+        F.col("o2.b").alias("y"),
     )
 
 
-def _lcc_report(deg: DataFrame, ntri: DataFrame, hint=None) -> DataFrame:
+def _closed(wedges: DataFrame, oriented: DataFrame, hint) -> DataFrame:
+    """The wedges an oriented edge x→y of ``oriented`` closes into a
+    triangle: one left-semi join on ``(x, y)``."""
+    return wedges.join(
+        hint(oriented.select(F.col("a").alias("x"), F.col("b").alias("y"))),
+        ["x", "y"],
+        "left_semi",
+    )
+
+
+def _lcc_report(deg: DataFrame, ntri: DataFrame, hint) -> DataFrame:
     """Final per-node report from a degree table and a ``(node,
     n_triangles)`` relation: missing nodes count 0 triangles,
     ``lcc = 2·T / (d·(d−1))`` as one IEEE division (0.0 when d < 2).
@@ -405,7 +425,6 @@ def _lcc_report(deg: DataFrame, ntri: DataFrame, hint=None) -> DataFrame:
     in ``F.broadcast`` so the node-sized triangle-count side broadcasts
     into the left join instead of a SortMergeJoin exchanging both
     node-sized aggregates."""
-    hint = hint or (lambda df: df)
     n_tri = F.coalesce(F.col("n_triangles"), F.lit(0).cast("long"))
     return deg.join(hint(ntri), "node", "left").select(
         "node",
@@ -425,7 +444,6 @@ def triangle_count(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    broadcast_max_edges: int | None = 4_000_000,
 ) -> DataFrame:
     """Per-node triangle counts + local clustering coefficient over an
     undirected graph (directions in the input are ignored — edges are
@@ -452,43 +470,29 @@ def triangle_count(
     of every triangle once. All-integer arithmetic + one final IEEE
     division per node — fully oracle-replayable.
 
-    ``broadcast_max_edges`` (r14, guide §3.1): the wedge set is
-    O(m^{3/2}) — at sf0.1 the 1.2M-edge co-purchase graph generates
-    41M wedges, and shuffling them for the closing semi-join was the
-    single most expensive exchange in the graph family (measured
-    ~6.5 s). While the EDGE count (one bounded count of the pinned
-    canonical edge list) stays at or below this bound, the oriented
-    edge relation broadcasts into the wedge join and the closing
-    semi-join instead — the wedge set is then produced AND closed
-    map-side and only the (far smaller) triangle set ever shuffles.
-    Identical rows either way; ``None`` or a bigger graph uses the
-    shuffle path (the only option at true 100 TB edge counts).
+    Broadcast gate (r14, guide §3.1): the wedge set is O(m^{3/2}) — at
+    sf0.1 the 1.2M-edge co-purchase graph generates 41M wedges, and
+    shuffling them for the closing semi-join was the single most
+    expensive exchange in the graph family (measured ~6.5 s). While the
+    EDGE count (one bounded count of the pinned canonical edge list, an
+    eager job at construction) stays at or below
+    ``_BROADCAST_MAX_EDGES``, the oriented edge relation broadcasts into
+    the wedge join and the closing semi-join instead — the wedge set is
+    then produced AND closed map-side and only the (far smaller)
+    triangle set ever shuffles. Identical rows either way; a bigger
+    graph uses the shuffle path (the only option at true 100 TB edge
+    counts).
     """
     e = _canonical_edges(edges, src, dst).localCheckpoint(eager=False)
-    bcast = broadcast_max_edges is not None and _fits(e, broadcast_max_edges)
-    hint = F.broadcast if bcast else (lambda df: df)
-    deg, oriented = _degree_oriented(e, hint=hint)
-    o1, o2 = oriented.alias("o1"), oriented.alias("o2")
-    # wedges from shared center a, out-neighbors rank-ordered so the
-    # closing edge (x, y), if present, is oriented exactly x -> y
-    wedges = o1.join(
-        hint(o2), (F.col("o1.a") == F.col("o2.a")) & _rank_lt("o1", "o2")
-    ).select(
-        F.col("o1.a").alias("c"),
-        F.col("o1.b").alias("x"),
-        F.col("o2.b").alias("y"),
-    )
-    tri = wedges.join(
-        hint(oriented.select(F.col("a").alias("x"), F.col("b").alias("y"))),
-        ["x", "y"],
-        "left_semi",
-    )
+    hint = _hint(_fits(e, _BROADCAST_MAX_EDGES))
+    deg, oriented = _degree_oriented(e, hint)
+    tri = _closed(_wedges(oriented, oriented, hint), oriented, hint)
     cnt = (
         tri.select(F.explode(F.array("c", "x", "y")).alias("node"))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("n_triangles"))
     )
-    return _lcc_report(deg, cnt, hint=hint if bcast else None)
+    return _lcc_report(deg, cnt, hint)
 
 
 def triangle_count_incremental(
@@ -497,7 +501,6 @@ def triangle_count_incremental(
     delta_edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    broadcast_max_edges: int | None = 4_000_000,
 ) -> DataFrame:
     """Maintain :func:`triangle_count` under a nightly edge delta
     WITHOUT re-running the O(m^{3/2}) wedge enumeration over the
@@ -520,11 +523,11 @@ def triangle_count_incremental(
     degrees and orientations), then wedge work proportional to
     |delta|·√m instead of m^{3/2}. Delta edges already present in the
     corpus are dropped by an anti-join (re-sending an edge is a no-op),
-    so the operator is idempotent over at-least-once feeds.
-    ``broadcast_max_edges``: the :func:`triangle_count` convention —
-    under the measured merged-edge-count gate the oriented/old/closer
-    relations broadcast into the anchored wedge joins, so the
-    delta-anchored wedge set is generated and closed map-side.
+    so the operator is idempotent over at-least-once feeds. Broadcast
+    gate: the :func:`triangle_count` one, on the merged edge count —
+    under it the oriented/old/closer relations broadcast into the
+    anchored wedge joins, so the delta-anchored wedge set is generated
+    and closed map-side.
     """
     eb = _canonical_edges(base_edges, src, dst).localCheckpoint(eager=False)
     dn = _canonical_edges(delta_edges, src, dst).join(
@@ -535,28 +538,17 @@ def triangle_count_incremental(
         .unionByName(dn.withColumn("nw", F.lit(True)))
         .localCheckpoint(eager=False)
     )
-    # the triangle_count broadcast gate (guide §3.1): one LIMIT-bounded
-    # probe of the pinned merged edge list decides whether the oriented/
-    # delta relations broadcast into the wedge, closing and anchor joins
-    bcast = broadcast_max_edges is not None and _fits(e, broadcast_max_edges)
-    hint = F.broadcast if bcast else (lambda df: df)
-    deg, oriented = _degree_oriented(e, hint=hint)
+    hint = _hint(_fits(e, _BROADCAST_MAX_EDGES))
+    deg, oriented = _degree_oriented(e, hint)
     new_o = oriented.where(F.col("nw"))
     old_o = oriented.where(~F.col("nw"))
-    wedge = lambda left, right: left.alias("o1").join(
-        hint(right.alias("o2")),
-        (F.col("o1.a") == F.col("o2.a")) & _rank_lt("o1", "o2"),
-    ).select(
-        F.col("o1.a").alias("c"),
-        F.col("o1.b").alias("x"),
-        F.col("o2.b").alias("y"),
-    )
     # (1) first wedge edge new; (2) first old, second new — together:
     # every wedge with >=1 new edge, each exactly once; closed by ANY
     # merged edge
-    w_new = wedge(new_o, oriented).unionByName(wedge(old_o, new_o))
-    closers = oriented.select(F.col("a").alias("x"), F.col("b").alias("y"))
-    tri_w = w_new.join(hint(closers), ["x", "y"], "left_semi")
+    w_new = _wedges(new_o, oriented, hint).unionByName(
+        _wedges(old_o, new_o, hint)
+    )
+    tri_w = _closed(w_new, oriented, hint)
     # (3) both wedge edges old, closer NEW: anchor on the new closer
     # (x -> y); its orientation implies rank(x) < rank(y), so this is
     # the same unique oriented triangle the full algorithm generates
@@ -591,14 +583,13 @@ def triangle_count_incremental(
             ).alias("n_triangles"),
         )
     )
-    return _lcc_report(deg, combined, hint=hint if bcast else None)
+    return _lcc_report(deg, combined, hint)
 
 
 def edge_jaccard(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    broadcast_max_edges: int | None = 4_000_000,
 ) -> DataFrame:
     """Per-edge neighborhood Jaccard (edge embeddedness / tie strength,
     the link-prediction score of Liben-Nowell & Kleinberg 2003 applied
@@ -619,28 +610,14 @@ def edge_jaccard(
     canonical (least, greatest) form and counted per edge — one extra
     edge-keyed aggregate over the triangle set, then one join back to
     the canonical edge list so zero-triangle edges report 0. All-integer
-    arithmetic + one final IEEE division per edge.
-    ``broadcast_max_edges``: the :func:`triangle_count` convention —
-    under the measured edge-count gate the oriented relation broadcasts
-    into the wedge and closing joins, so the O(m^{3/2}) wedge set is
-    generated and closed map-side and never shuffled."""
+    arithmetic + one final IEEE division per edge. Broadcast gate: the
+    :func:`triangle_count` one — under it the oriented relation
+    broadcasts into the wedge and closing joins, so the O(m^{3/2})
+    wedge set is generated and closed map-side and never shuffled."""
     e = _canonical_edges(edges, src, dst).localCheckpoint(eager=False)
-    bcast = broadcast_max_edges is not None and _fits(e, broadcast_max_edges)
-    hint = F.broadcast if bcast else (lambda df: df)
-    deg, oriented = _degree_oriented(e, hint=hint)
-    o1, o2 = oriented.alias("o1"), oriented.alias("o2")
-    wedges = o1.join(
-        hint(o2), (F.col("o1.a") == F.col("o2.a")) & _rank_lt("o1", "o2")
-    ).select(
-        F.col("o1.a").alias("c"),
-        F.col("o1.b").alias("x"),
-        F.col("o2.b").alias("y"),
-    )
-    tri = wedges.join(
-        hint(oriented.select(F.col("a").alias("x"), F.col("b").alias("y"))),
-        ["x", "y"],
-        "left_semi",
-    )
+    hint = _hint(_fits(e, _BROADCAST_MAX_EDGES))
+    deg, oriented = _degree_oriented(e, hint)
+    tri = _closed(_wedges(oriented, oriented, hint), oriented, hint)
     tri_edges = tri.select(
         F.explode(
             F.array(
@@ -787,9 +764,11 @@ def k_core(
     e = _canonical_edges(edges, src, dst).localCheckpoint(eager=False)
 
     def degrees(edge_df: DataFrame) -> DataFrame:
+        # ONE scan of the lazily pinned edge list: a union of a u-scan
+        # and a v-scan puts two concurrent tasks on each pinned
+        # partition, and both compute it
         return (
-            edge_df.select(F.col("u").alias("node"))
-            .unionByName(edge_df.select(F.col("v").alias("node")))
+            edge_df.select(F.explode(F.array("u", "v")).alias("node"))
             .groupBy("node")
             .agg(F.count(F.lit(1)).alias("core_degree"))
         )
@@ -821,7 +800,6 @@ def label_propagation(
     n_iters: int = 3,
     start_labels: DataFrame | None = None,
     validate: bool = True,
-    broadcast_max_nodes: int | None = 8_000_000,
 ) -> DataFrame:
     """Synchronous label-propagation community detection (Raghavan et
     al. 2007, Phys. Rev. E 76) — ``(node, label)`` after ``n_iters``
@@ -868,15 +846,14 @@ def label_propagation(
     ``validate=False`` skips the eager probe for labelings that are
     unique by construction (this function's own output is).
 
-    ``broadcast_max_nodes``: the :func:`pagerank` convention — while
-    the node count (one bounded count of the pinned label vector) stays
-    at or below this bound, the label vector broadcasts into the
-    per-round neighbor join and the edge list is never re-exchanged;
-    ``None`` (or a larger graph) falls back to the shuffle path.
-    EAGERNESS NOTE: as in :func:`pagerank`, the gate's bounded node
-    count (and the seed dup probe under ``validate=True``) run at
-    CONSTRUCTION time, and a passing gate eagerly pins the edge-sized
-    EDGE list by ``dst``; the escape hatches are the same.
+    Broadcast gate: the :func:`pagerank` one — while the node count
+    (one bounded count of the pinned label vector) stays at or below
+    ``_BROADCAST_MAX_NODES``, the label vector broadcasts into the
+    per-round neighbor join and the edge list is never re-exchanged; a
+    larger graph falls back to the shuffle path. EAGERNESS NOTE: as in
+    :func:`pagerank`, the gate's bounded node count (and the seed dup
+    probe under ``validate=True``) run at CONSTRUCTION time, and a
+    passing gate eagerly pins the edge-sized EDGE list by ``dst``.
     """
     if n_iters < 0:
         raise ValueError("n_iters must be >= 0")
@@ -922,11 +899,8 @@ def label_propagation(
     # instead of exchanging + sorting the edge list per iteration.
     # One LIMIT-bounded probe on the pinned seed vector decides
     # (identical rows either way — only the physical plan changes).
-    if broadcast_max_nodes is not None and n_iters > 0:
-        bcast = _fits(lab, broadcast_max_nodes)
-    else:
-        bcast = False
-    hint = F.broadcast if bcast else (lambda df: df)
+    bcast = n_iters > 0 and _fits(lab, _BROADCAST_MAX_NODES)
+    hint = _hint(bcast)
     if bcast:
         # guide §2.4 (r15): one up-front hash exchange of the pinned
         # edge list by dst replaces BOTH per-round aggregate Exchanges

@@ -11,8 +11,8 @@ The reference's joins are all pandas index joins or Python loops:
 Spark-first: the interval join is ONE equi-join on the platform key with the
 time range as a residual predicate — the equi part hash-partitions both
 sides, so it scales; the range filter evaluates inside the join. When the
-dimension side is small (deployment catalogs always are), broadcast it and
-there is no shuffle at all.
+dimension side is small (deployment catalogs always are), AQE broadcasts it
+from runtime stats and there is no shuffle at all.
 """
 
 from __future__ import annotations
@@ -29,7 +29,6 @@ def interval_join(
     fact_time: str,
     dim_start: str,
     dim_end: str,
-    broadcast_dims: bool | None = None,
     how: str = "inner",
 ) -> DataFrame:
     """Key + time-range join (J5): fact rows matched to the dimension row
@@ -39,23 +38,17 @@ def interval_join(
     (``platform_code=`` + ``time>=/<=``,
     ``/root/reference/gdutils/osmc/__init__.py:182-184``) as one relational
     join. Equi part drives the physical strategy; the range is a residual
-    filter inside the join operator.
-
-    ``broadcast_dims`` defaults to None — let Catalyst/AQE pick from
-    runtime stats. That is the scale-safe default: a windows table
-    *derived from the fact side* (one row per user/device) is
-    entity-sized, and force-broadcasting it melts the driver at 1e9
-    entities. Pass True only for genuinely catalog-sized dims
-    (deployment windows, instrument registries) where skipping the
-    shuffle is worth pinning the plan.
+    filter inside the join operator. The join strategy is Catalyst/AQE's,
+    from runtime stats: a windows table *derived from the fact side* (one
+    row per user/device) is entity-sized, and force-broadcasting it would
+    melt the driver at 1e9 entities.
     """
-    d = F.broadcast(dims) if broadcast_dims else dims
     cond = (
-        (facts[fact_key] == d[dim_key])
-        & (facts[fact_time] >= d[dim_start])
-        & (facts[fact_time] <= d[dim_end])
+        (facts[fact_key] == dims[dim_key])
+        & (facts[fact_time] >= dims[dim_start])
+        & (facts[fact_time] <= dims[dim_end])
     )
-    return facts.join(d, cond, how)
+    return facts.join(dims, cond, how)
 
 
 def orphans(left: DataFrame, right: DataFrame, key: str) -> DataFrame:
@@ -64,19 +57,12 @@ def orphans(left: DataFrame, right: DataFrame, key: str) -> DataFrame:
     return left.join(right, key, "left_anti")
 
 
-def with_orphan_flag(
-    left: DataFrame, right: DataFrame, key: str, broadcast_probe: bool | None = None
-) -> DataFrame:
+def with_orphan_flag(left: DataFrame, right: DataFrame, key: str) -> DataFrame:
     """Left join + boolean ``orphaned`` flag (probe-side null ⇒ orphan).
-
-    ``broadcast_probe`` defaults to None — let Catalyst/AQE pick from the
-    probe's runtime size (same scale rationale as :func:`interval_join`:
-    a distinct-key probe over an entity-keyed right side is entity-sized,
-    and force-broadcasting it melts the driver at 1e9 keys). Pass True
-    only for genuinely catalog-sized right tables."""
+    Catalyst/AQE picks the join from the probe's runtime size (the
+    :func:`interval_join` rationale: a distinct-key probe over an
+    entity-keyed right side is entity-sized)."""
     probe = right.select(key).distinct().withColumn("__hit", F.lit(True))
-    if broadcast_probe:
-        probe = F.broadcast(probe)
     return (
         left.join(probe, key, "left")
         .withColumn("orphaned", F.col("__hit").isNull())

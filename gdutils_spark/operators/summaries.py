@@ -146,7 +146,6 @@ def mad_outlier_summary(
     value_col: str,
     group_col: str,
     threshold: float = 3.5,
-    broadcast_stats: bool | None = None,
 ) -> DataFrame:
     """Per-group ROBUST outlier summary via the modified z-score
     (Iglewicz & Hoaglin 1993, "How to Detect and Handle Outliers"):
@@ -163,12 +162,10 @@ def mad_outlier_summary(
     the flag arithmetic is two IEEE multiplies on identical doubles —
     counts hash-verify cross-engine. Plan shape: two grouped percentile
     aggregates (median, then MAD of the residuals) joined back between
-    them, then one counting pass. ``broadcast_stats`` defaults to None —
-    the median/MAD tables are GROUP-cardinality-sized, so the join
-    strategy is left to Catalyst/AQE runtime stats (broadcast means a
-    driver collect: fine for per-type groups, fatal for per-user groups
-    at 1e9 entities). Pass True to pin the broadcast for known-small
-    group keys, saving the two shuffles."""
+    them, then one counting pass. The median/MAD tables are
+    GROUP-cardinality-sized, so the join strategy is left to
+    Catalyst/AQE runtime stats (broadcast means a driver collect: fine
+    for per-type groups, fatal for per-user groups at 1e9 entities)."""
     # NaN dropped alongside NULL (r13 null-fixture hunt): the engines
     # ORDER NaN differently inside exact percentile (Spark sorts it
     # largest, DuckDB quantile_cont ignores it), so one NaN measure
@@ -180,16 +177,12 @@ def mad_outlier_summary(
     med = base.groupBy("grp").agg(
         F.percentile(F.col("v"), F.lit(0.5)).alias("med")
     )
-    if broadcast_stats:
-        med = F.broadcast(med)
     resid = base.join(med, "grp").select(
         "grp", "v", "med", F.abs(F.col("v") - F.col("med")).alias("r")
     )
     mad = resid.groupBy("grp").agg(
         F.percentile(F.col("r"), F.lit(0.5)).alias("mad")
     )
-    if broadcast_stats:
-        mad = F.broadcast(mad)
     flagged = resid.join(mad, "grp").select(
         "grp",
         "med",

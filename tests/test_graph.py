@@ -706,13 +706,16 @@ def test_edge_jaccard_consistent_with_triangle_count(spark):
     assert ej.count() == n_canon
 
 
-def test_broadcast_gate_paths_row_identical(spark):
-    """r15 differential pin: the broadcast-gated loop bodies of
-    label_propagation and pagerank (partition-pinned edge relation) must
-    emit EXACTLY the rows of the gate-off shuffle path."""
+def test_broadcast_gate_paths_row_identical(spark, monkeypatch):
+    """r15 differential pin: every broadcast-gated operator emits EXACTLY
+    the rows of its shuffle path, forced by a bound no graph fits —
+    label_propagation and pagerank (partition-pinned edge relation) on
+    ``_BROADCAST_MAX_NODES``; triangle_count, triangle_count_incremental
+    and edge_jaccard (broadcast wedge and closing joins) on
+    ``_BROADCAST_MAX_EDGES``."""
     import random
 
-    from gdutils_spark.operators.graph import label_propagation
+    from gdutils_spark.operators import graph
 
     rng = random.Random(97)
     edge_list = [(a, b) for a in range(6) for b in range(a + 1, 6)]
@@ -721,22 +724,37 @@ def test_broadcast_gate_paths_row_identical(spark):
     edge_list = [(s, t) for s, t in edge_list if s != t]
     df = spark.createDataFrame(edge_list, "src long, dst long")
     both = df.union(df.selectExpr("dst AS src", "src AS dst"))
+    # new triangles through old and new edges, plus an edge already there
+    delta = spark.createDataFrame(
+        [(0, 10), (10, 12), (12, 0), (3, 14), (1, 0)], df.schema
+    )
 
-    lab_on = {r.node: r.label for r in label_propagation(both, n_iters=3).collect()}
-    lab_off = {
-        r.node: r.label
-        for r in label_propagation(
-            both, n_iters=3, broadcast_max_nodes=None
-        ).collect()
-    }
-    assert lab_on == lab_off
+    def hinted(out):
+        return "strategy=broadcast" in out._jdf.queryExecution().analyzed().toString()
 
-    pr_on = {r.node: r.pr for r in pagerank(both, n_iters=3).collect()}
-    pr_off = {
-        r.node: r.pr
-        for r in pagerank(both, n_iters=3, broadcast_max_nodes=None).collect()
-    }
-    assert pr_on == pr_off  # bit-identical doubles: same ordered fold
+    def run():
+        base = graph.triangle_count(df)
+        wedge_family = {
+            "tri": base,
+            "tri_inc": graph.triangle_count_incremental(base, df, delta),
+            "ej": graph.edge_jaccard(df),
+        }
+        rows = {k: sorted(v.collect()) for k, v in wedge_family.items()}
+        rows["lpa"] = sorted(graph.label_propagation(both, n_iters=3).collect())
+        # bit-identical doubles: the same ordered fold on both paths
+        rows["pr"] = sorted(graph.pagerank(both, n_iters=3).collect())
+        return rows, {k: hinted(v) for k, v in wedge_family.items()}
+
+    on, on_hints = run()
+    monkeypatch.setattr(graph, "_BROADCAST_MAX_NODES", -1)
+    monkeypatch.setattr(graph, "_BROADCAST_MAX_EDGES", -1)
+    off, off_hints = run()
+    assert all(on_hints.values()) and not any(off_hints.values())
+    for name in on:
+        assert on[name] == off[name], name
+    assert sum(r.n_triangles for r in on["tri_inc"]) > sum(
+        r.n_triangles for r in on["tri"]
+    )
 
 
 def _kcore_edges(spark, id_type: str):
@@ -763,7 +781,9 @@ def test_k_core_one_task_matches_shuffle_path(spark, monkeypatch, id_type):
     no edge count fits, so empty input takes it too) return the same
     rows, schema and pandas dtypes — converged, unconverged (the
     documented superset), ``n_iters=0``, ``k`` above every degree, and
-    empty input."""
+    empty input. Each path reads the lazily pinned edge list through
+    ONE scan: a union of a u-scan and a v-scan of it puts two
+    concurrent tasks on each pinned partition, and both compute it."""
     from gdutils_spark.operators import graph
 
     df = _kcore_edges(spark, id_type)
@@ -772,8 +792,9 @@ def test_k_core_one_task_matches_shuffle_path(spark, monkeypatch, id_type):
 
     def run(edges, k, iters):
         out = graph.k_core(edges, k=k, n_iters=iters)
-        plan = out._jdf.queryExecution().analyzed().toString()
-        return out, "MapInPandas" in plan, out.toPandas()
+        qe = out._jdf.queryExecution()
+        assert qe.optimizedPlan().toString().count("LogicalRDD") == 1
+        return out, "MapInPandas" in qe.analyzed().toString(), out.toPandas()
 
     one = [run(*c) for c in cases]
     monkeypatch.setattr(graph, "_ONE_TASK_MAX_EDGES", -1)

@@ -448,6 +448,60 @@ def test_star_cc_raises_when_budget_too_small(spark):
         connected_components(edges, algorithm="star", max_iter=1)
 
 
+def test_hash_min_cc_raises_when_budget_too_small(spark):
+    """Hash-min needs diameter + 1 rounds (the last confirms the
+    fixpoint). An 11-node path has diameter 10: 3 rounds must raise,
+    as the star variant does, instead of returning 8 partial clusters;
+    11 rounds label the whole path 0."""
+    edges = spark.createDataFrame([(i, i + 1) for i in range(10)], EDGES)
+    with pytest.raises(RuntimeError, match="converge"):
+        connected_components(edges, max_iter=3)
+    rows = connected_components(edges, max_iter=11).collect()
+    assert sorted((r.node, r.comp) for r in rows) == [(i, 0) for i in range(11)]
+
+
+def test_simhash_near_pairs_finds_every_pair_within_max_hamming(
+    spark, monkeypatch
+):
+    """Banding recall over crafted fingerprints: every pair within
+    ``max_hamming`` comes back, none beyond it. Doc 1 differs from doc 0
+    by one bit in each of the four 15-bit chunks of the old fixed
+    banding (hamming 4, which no chunk of it matched); the rest are
+    random fingerprints with near neighbours planted at every distance
+    up to 12."""
+    import random
+
+    from gdutils_spark.operators import dedup
+
+    bits = dedup.SIMHASH_BITS
+    rng = random.Random(5)
+    fps = [0, (1 << 0) | (1 << 15) | (1 << 30) | (1 << 45)]
+    for d in range(13):
+        fp = rng.getrandbits(bits)
+        flips = rng.sample(range(bits), d)
+        fps += [fp, fp ^ sum(1 << b for b in flips)]
+    fp_df = spark.createDataFrame(list(enumerate(fps)), "doc long, simhash long")
+    monkeypatch.setattr(dedup, "simhash", lambda *a, **k: fp_df)
+
+    for max_hamming in (0, 3, 4, 9):
+        want = sorted(
+            (i, j, bin(a ^ b).count("1"))
+            for i, a in enumerate(fps)
+            for j, b in enumerate(fps)
+            if i < j and bin(a ^ b).count("1") <= max_hamming
+        )
+        got = sorted(
+            tuple(r) for r in dedup.simhash_near_pairs(
+                fp_df, max_hamming=max_hamming
+            ).collect()
+        )
+        assert got == want, max_hamming
+    assert (0, 1, 4) in want
+    for bad in (-1, bits):
+        with pytest.raises(ValueError, match="max_hamming"):
+            dedup.simhash_near_pairs(fp_df, max_hamming=bad)
+
+
 def test_benchmark_contamination(spark):
     from gdutils_spark.operators.dedup import benchmark_contamination
 

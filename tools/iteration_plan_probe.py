@@ -10,11 +10,11 @@ only — never used for timing, and the gate's bounded ``count()`` /
 ``explain("formatted")`` of the full unrolled lineage twice per
 operator:
 
-* ``*_before``: broadcast gate OFF (``broadcast_max_nodes/edges=None``)
-  — the pre-r14 shuffle path (per-iteration Exchange + Sort under
-  SortMergeJoin).
-* ``*_after``: gate at its default — the shipped path (per-iteration
-  BroadcastHashJoin, edge list never re-exchanged).
+* ``*_before``: broadcast gate OFF (the module's bound set to -1, so
+  no graph fits) — the pre-r14 shuffle path (per-iteration Exchange +
+  Sort under SortMergeJoin).
+* ``*_after``: gate at its shipped bound — per-iteration
+  BroadcastHashJoin, edge list never re-exchanged.
 
 Inputs are the SAME copurchase edge builder and constants the registry
 queries use, so the dumped shapes are the queries' shapes.
@@ -90,11 +90,7 @@ def _dump(df, name: str, tag: str) -> None:
 
 def main() -> None:
     spark = get_spark("gdutils-iterplan-probe")
-    from gdutils_spark.operators.graph import (
-        label_propagation,
-        pagerank,
-        triangle_count,
-    )
+    from gdutils_spark.operators import graph
     from gdutils_spark.queries_ext import (
         _copurchase_edges,
         LPA_ITERS,
@@ -117,48 +113,45 @@ def main() -> None:
     cases = [
         (
             "part_copurchase_pagerank",
-            lambda gate: topk(
-                pagerank(
-                    both,
-                    damping=PR_DAMPING,
-                    n_iters=PR_ITERS,
-                    broadcast_max_nodes=gate,
-                )
+            lambda: topk(
+                graph.pagerank(both, damping=PR_DAMPING, n_iters=PR_ITERS)
             ),
-            8_000_000,
+            "_BROADCAST_MAX_NODES",
         ),
         (
             "part_copurchase_pagerank_weighted",
-            lambda gate: topk(
-                pagerank(
+            lambda: topk(
+                graph.pagerank(
                     wedges,
                     damping=PR_DAMPING,
                     n_iters=PR_ITERS,
                     weight="w",
                     validate=False,
-                    broadcast_max_nodes=gate,
                 )
             ),
-            8_000_000,
+            "_BROADCAST_MAX_NODES",
         ),
         (
             "part_copurchase_communities",
-            lambda gate: label_propagation(
-                both, n_iters=LPA_ITERS, broadcast_max_nodes=gate
-            ),
-            8_000_000,
+            lambda: graph.label_propagation(both, n_iters=LPA_ITERS),
+            "_BROADCAST_MAX_NODES",
         ),
         (
             "part_copurchase_triangles",
-            lambda gate: triangle_count(half, broadcast_max_edges=gate),
-            4_000_000,
+            lambda: graph.triangle_count(half),
+            "_BROADCAST_MAX_EDGES",
         ),
     ]
-    for name, build, default_gate in cases:
+    for name, build, bound in cases:
+        shipped = getattr(graph, bound)
+        setattr(graph, bound, -1)
+        try:
+            with _no_checkpoint():
+                _dump(build(), name, "before")
+        finally:
+            setattr(graph, bound, shipped)
         with _no_checkpoint():
-            _dump(build(None), name, "before")
-        with _no_checkpoint():
-            _dump(build(default_gate), name, "after")
+            _dump(build(), name, "after")
 
 
 if __name__ == "__main__":

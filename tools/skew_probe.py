@@ -128,10 +128,14 @@ def graph_main() -> None:
     print(f"| full, base + hub | {t_tri_hub:.2f} s |")
     print(f"| incremental, 1000-edge delta ALL touching the hub | {t_inc:.2f} s |")
     # orientation bound check: the hub's oriented out-list stays small
-    from gdutils_spark.operators.graph import _canonical_edges, _degree_oriented
+    from gdutils_spark.operators.graph import (
+        _canonical_edges,
+        _degree_oriented,
+        _hint,
+    )
 
     e = _canonical_edges(hubbed, "src", "dst")
-    _deg, oriented = _degree_oriented(e)
+    _deg, oriented = _degree_oriented(e, _hint(False))
     out_max = (
         oriented.groupBy("a").count().agg(F.max("count")).first()[0]
     )
@@ -151,8 +155,10 @@ def edge_jaccard_main() -> None:
 
     from gdutils_spark.operators.graph import (
         _canonical_edges,
+        _closed,
         _degree_oriented,
-        _rank_lt,
+        _hint,
+        _wedges,
         edge_jaccard,
         triangle_count,
     )
@@ -193,16 +199,9 @@ def edge_jaccard_main() -> None:
     # skew quantities on the hubbed graph: triangle volume (the explode
     # input), 3x explode output, and the hottest per-edge key
     e = _canonical_edges(hubbed, "src", "dst")
-    _deg, oriented = _degree_oriented(e)
-    o1, o2 = oriented.alias("o1"), oriented.alias("o2")
-    wedges = o1.join(o2, (F.col("o1.a") == F.col("o2.a")) & _rank_lt("o1", "o2")).select(
-        F.col("o1.a").alias("c"), F.col("o1.b").alias("x"), F.col("o2.b").alias("y")
-    )
-    tri = wedges.join(
-        oriented.select(F.col("a").alias("x"), F.col("b").alias("y")),
-        ["x", "y"],
-        "left_semi",
-    )
+    no_hint = _hint(False)
+    _deg, oriented = _degree_oriented(e, no_hint)
+    tri = _closed(_wedges(oriented, oriented, no_hint), oriented, no_hint)
     n_tri = tri.count()
     hot = (
         edge_jaccard(hubbed)
