@@ -1,6 +1,7 @@
 """Benchmark harness: runs every registry query at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line with per-query wall seconds.
+JSON line with per-query wall seconds. ``python bench.py NAME ...`` times
+only the named queries.
 
 Each query materializes via collect() (all results are small aggregates);
 the first run includes JVM/session warmup, so a throwaway warmup query runs
@@ -70,7 +71,7 @@ def main() -> None:
     STREAMING = {"rt_stream_dedup", "rt_stream_daily_counts"}
     timings: dict[str, float] = {}
     cold: dict[str, float] = {}
-    for name in sorted(QUERIES):
+    for name in sorted(sys.argv[1:] or QUERIES):
         fn = QUERIES[name]
         best = float("inf")
         for r in range(1 if name in STREAMING else RUNS):

@@ -361,9 +361,9 @@ def _degree_oriented(e: DataFrame, hint) -> "tuple[DataFrame, DataFrame]":
     node-sized degree table broadcasts into both orientation joins and
     the edge list never shuffles here."""
     extras = [c for c in e.columns if c not in ("u", "v")]
+    # one scan of the edges, as in k_core's degrees()
     deg = (
-        e.select(F.col("u").alias("node"))
-        .unionByName(e.select(F.col("v").alias("node")))
+        e.select(F.explode(F.array("u", "v")).alias("node"))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("degree"))
         .localCheckpoint(eager=False)

@@ -4069,24 +4069,33 @@ def orders_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     (deletes for keys ≡0 mod 21, price-bump updates for other keys ≡0
     mod 7, re-keyed inserts for keys ≡3 mod 7) applied to the orders
     snapshot via anti-join + union — the copy-on-write merge a lakehouse
-    format runs internally, as two shuffles on the merge key."""
+    format runs internally, as two shuffles on the merge key (none while
+    ``orders`` loads as one partition)."""
     from gdutils_spark.operators.cdc import apply_cdc
 
     o = load_table(spark, sf_dir, "orders")
     k = F.col("o_orderkey")
-    dels = o.where(k % 21 == 0).withColumn("op", F.lit("D"))
-    upds = (
-        o.where((k % 7 == 0) & (k % 21 != 0))
-        .withColumn("o_totalprice", F.col("o_totalprice") + F.lit(100.0))
-        .withColumn("o_orderstatus", F.lit("X"))
-        .withColumn("op", F.lit("U"))
+    dele = k % 21 == 0
+    upd = (k % 7 == 0) & (k % 21 != 0)
+    ins = k % 7 == 3
+    # ONE filtered scan with per-row `when`s over the three disjoint
+    # residues, not a union of three scans: a small table loads as one
+    # partition, and a union of one-partition scans runs them serially
+    # in one task (sources/tables.py)
+    changed = {
+        "o_orderkey": F.when(ins, k + F.lit(CDC_NEW_KEY_OFFSET)).otherwise(k),
+        "o_orderstatus": F.when(upd, F.lit("X")).otherwise(
+            F.col("o_orderstatus")
+        ),
+        "o_totalprice": F.when(
+            upd, F.col("o_totalprice") + F.lit(100.0)
+        ).otherwise(F.col("o_totalprice")),
+    }
+    changes = o.where(dele | upd | ins).select(
+        *[changed.get(c, F.col(c)).alias(c) for c in o.columns],
+        F.when(dele, F.lit("D")).when(upd, F.lit("U")).otherwise(F.lit("I"))
+        .alias("op"),
     )
-    ins = (
-        o.where(k % 7 == 3)
-        .withColumn("o_orderkey", k + F.lit(CDC_NEW_KEY_OFFSET))
-        .withColumn("op", F.lit("I"))
-    )
-    changes = dels.unionByName(upds).unionByName(ins)
     # validate=False: this batch is constructed from disjoint key
     # residues (op domain and key uniqueness hold by construction), so
     # it is exactly the trusted-feed case the escape hatch exists for —

@@ -20,6 +20,14 @@ Spark runtime knobs the reference never had:
   process, so callers who want call sites pass it in ``extra_conf``.
 * ``local[N]`` with N from ``SPARK_GRAFT_CPUS``, else the CPUs this
   process may run on (``os.sched_getaffinity``).
+* Driver heap from ``SPARK_GRAFT_DRIVER_MEM``, else half the memory
+  this process may use, at most 24g (:func:`host_driver_mem`): the
+  host's physical memory, or the cgroup memory limit when that is
+  smaller. In local mode
+  the driver JVM is the whole cluster; the other half is left to the
+  Python workers (Arrow batches, pandas UDFs), the JIT code cache and
+  the page cache. A fixed 24g default promised more heap than a 15 GB
+  host has.
 
 Session policy (:data:`POLICY`): three runtime SQL confs that change what
 a query returns or how it plans.
@@ -57,6 +65,36 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(
     os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
 )
+
+_MAX_DRIVER_MEM_MB = 24 << 10
+
+# cgroup v2, then v1; "max" (v2) or a near-2**63 value (v1) means no limit
+_CGROUP_MEM_LIMITS = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+
+
+def _cgroup_mem_limit() -> int | None:
+    for path in _CGROUP_MEM_LIMITS:
+        try:
+            with open(path) as f:
+                return int(f.read())
+        except (OSError, ValueError):
+            continue
+    return None
+
+
+def host_driver_mem() -> str:
+    """Default driver heap: half the memory this process may use (the
+    host's physical memory, or the cgroup memory limit when smaller), at
+    most 24g, as a JVM size in MiB (``"8192m"`` on a 16 GiB host)."""
+    mem = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    limit = _cgroup_mem_limit()
+    if limit is not None:
+        mem = min(mem, limit)
+    return f"{min(mem // 2 >> 20, _MAX_DRIVER_MEM_MB)}m"
+
 
 POLICY: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
@@ -117,7 +155,10 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or host_driver_mem(),
+        )
         # bench/driver sessions compile hundreds of whole-stage-codegen
         # classes in one JVM; the 240m default JIT code cache can fill,
         # which silently disables compilation and drops hot expression

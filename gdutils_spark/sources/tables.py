@@ -27,6 +27,36 @@ a stale file listing).
 * Directory paths (partitioned or multi-file tables) are never memoized:
   their schema depends on the files inside, so they keep plain inference.
 
+One partition for small tables. A regular file of at most
+:data:`_ONE_PARTITION_MAX_BYTES` loads as ``df.coalesce(1)``. The file
+scan reports an unknown partitioning, so every aggregate, window, sort
+or join above it planned an Exchange (a range one for a global sort),
+and under AQE each Exchange is one query stage and one more Spark job
+over a few KB. The coalesced relation reports ``SinglePartition``,
+which satisfies every clustered, ordered and all-tuples distribution,
+so a small request plans no Exchange and runs as one job. The decision
+reads the ``st_size`` of the ``os.stat`` the memo already takes: no
+option, env var or session conf, and no Spark job. Directory tables
+and larger files keep the plain scan.
+
+* Bound: 512 KiB, below ``spark.sql.files.openCostInBytes`` (4 MiB), so
+  a gated file is one scan split anyway: the gate takes no scan
+  parallelism, only the parallelism of the work above the scan. It gates
+  every sf0.01 table but ``lineitem`` (1,042,463 B), and at sf0.1 only
+  the dimension tables ``customer``, ``part``, ``supplier``, ``nation``
+  and ``region``. Contract: the gate never fires on a fact table
+  (``orders``, ``lineitem``, ``events``) or a corpus table
+  (``documents``, ``embeddings``) at sf0.1 or above. Work above a corpus
+  scan is per-row CPU (tokenizing, shingling, hashing) that needs the
+  cores: with a 1 MiB bound sf0.1 ``documents`` (594,568 B) was gated
+  and 13 corpus queries in ``bench.py`` ran 1.27-1.57x slower in one
+  task. The sizing runs are in ``perf/README.md``.
+* Sibling scans run serially. A ``Union`` of ``SinglePartition``
+  children keeps the whole plan in one task, so a plan that unions
+  several filtered scans of one gated table loses the 2-3 parallel
+  tasks it had. Build such a batch from one scan with ``when``
+  expressions instead (``queries_ext.orders_cdc_upsert``).
+
 Session conf is read, never written: the UTC zone and ``nanosAsLong`` that
 the timestamp normalization needs come from the session policy
 (:mod:`gdutils_spark.session`), so the load order cannot change the memo
@@ -85,6 +115,10 @@ _SCHEMA_CONFS = (
     "spark.sql.caseSensitive",
 )
 
+# Regular files of at most this many bytes load as one partition (see the
+# module docstring); -1 turns the gate off.
+_ONE_PARTITION_MAX_BYTES = 512 << 10
+
 # (real path, conf values) -> ((st_size, st_mtime_ns, st_ino), schema).
 # Each access is one dict get or set, atomic under the GIL; two threads
 # missing at once both infer and store the same schema.
@@ -93,7 +127,8 @@ _schema_memo: dict[tuple, tuple[tuple[int, int, int], StructType]] = {}
 
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)``, inferring the schema of a regular file
-    once per file version and conf combination (see the module docstring)."""
+    once per file version and conf combination, and in one partition when
+    the file is small (see the module docstring)."""
     try:
         st = os.stat(path)
     except FileNotFoundError:
@@ -107,10 +142,11 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     version = (st.st_size, st.st_mtime_ns, st.st_ino)
     hit = _schema_memo.get(key)
     if hit is not None and hit[0] == version:
-        return spark.read.schema(hit[1]).parquet(path)
-    df = spark.read.parquet(path)
-    _schema_memo[key] = (version, df.schema)
-    return df
+        df = spark.read.schema(hit[1]).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        _schema_memo[key] = (version, df.schema)
+    return df.coalesce(1) if st.st_size <= _ONE_PARTITION_MAX_BYTES else df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -757,6 +757,29 @@ def test_broadcast_gate_paths_row_identical(spark, monkeypatch):
     )
 
 
+def test_wedge_family_degree_table_scans_pinned_edges_once(spark, monkeypatch):
+    """``_degree_oriented`` reads the lazily pinned canonical edges through
+    ONE scan (``explode(array(u, v))``), as ``k_core`` does: a union of a
+    u-scan and a v-scan puts two concurrent tasks on each pinned
+    partition, both compute it, and the second store logs ``Block
+    rdd_N_0 already exists``."""
+    from gdutils_spark.operators import graph
+
+    e = graph._canonical_edges(
+        _kcore_edges(spark, "long"), "src", "dst"
+    ).localCheckpoint(eager=False)
+    pinned = []
+    pin = type(e).localCheckpoint
+
+    def recording_pin(self, eager=True):
+        pinned.append(self._jdf.queryExecution().optimizedPlan().toString())
+        return pin(self, eager)
+
+    monkeypatch.setattr(type(e), "localCheckpoint", recording_pin)
+    graph._degree_oriented(e, graph._hint(False))
+    assert pinned[0].count("LogicalRDD") == 1  # the degree table
+
+
 def _kcore_edges(spark, id_type: str):
     """Clique + path tail + random fringe, plus every input the
     canonicalization must absorb: self-loops, duplicated and reversed

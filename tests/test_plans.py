@@ -2,7 +2,15 @@
 
 Built on gdutils_spark.plans — filter/projection pushdown reaches the
 parquet scan, small dims broadcast, hot paths stay in whole-stage codegen
-with no Python evaluation in relational queries."""
+with no Python evaluation in relational queries.
+
+The test tables are small enough for ``load_table``'s single-partition
+gate, and every test runs on the plans it produces, except the few that
+pin an Exchange count: under the gate a one-partition scan satisfies
+every clustered distribution, so those plans have no Exchange at all.
+Those tests take the ``above_one_partition_bound`` fixture and pin the
+plans of tables above the bound (``test_sources.py`` pins the gated
+plans)."""
 
 from __future__ import annotations
 
@@ -19,7 +27,14 @@ from gdutils_spark.plans import (
     whole_stage_codegen_active,
 )
 from gdutils_spark.queries import QUERIES
+from gdutils_spark.sources import tables
 from gdutils_spark.sources.tables import load_table
+
+
+@pytest.fixture
+def above_one_partition_bound(monkeypatch):
+    """Plan every table as one above ``_ONE_PARTITION_MAX_BYTES``."""
+    monkeypatch.setattr(tables, "_ONE_PARTITION_MAX_BYTES", -1)
 
 
 def test_filter_pushdown_reaches_parquet(spark, sf_correct):
@@ -40,6 +55,7 @@ def test_q5_broadcasts_dims(spark, sf_correct):
     assert plan.count("BroadcastHashJoin") >= 4
 
 
+@pytest.mark.usefixtures("above_one_partition_bound")
 def test_first_week_has_no_join_and_single_shuffle(spark, sf_correct):
     """The per-user windows are fact-derived, so the scale-safe plan is a
     min-over-user window + reused hash partitioning for the final agg:
@@ -129,6 +145,7 @@ def test_whole_stage_codegen_active(spark, sf_correct):
     assert whole_stage_codegen_active(QUERIES["q1_pricing_summary"](spark, sf_correct))
 
 
+@pytest.mark.usefixtures("above_one_partition_bound")
 def test_sessionization_single_shuffle(spark, sf_correct):
     """Both window passes (gap marker, running index) and the session
     aggregate share the user_id partitioning → exactly ONE Exchange; the
@@ -139,6 +156,7 @@ def test_sessionization_single_shuffle(spark, sf_correct):
     assert plan.count(") Sort") == 1
 
 
+@pytest.mark.usefixtures("above_one_partition_bound")
 def test_packing_single_shuffle(spark, sf_correct):
     """Sequence packing: one shuffle on the shard key serves the window
     and the batch aggregate."""
@@ -390,6 +408,7 @@ def test_cdc_upsert_no_python_single_key_shuffle_shape(spark, sf_correct):
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
 
 
+@pytest.mark.usefixtures("above_one_partition_bound")
 def test_scd2_single_shuffle_two_windows(spark, sf_correct):
     """SCD2: both window passes share the (user_id) partitioning — ONE
     exchange of the event stream, no joins."""
@@ -753,6 +772,7 @@ def test_ingest_pipeline_broadcast_shaped(spark, sf_correct):
     assert "SortMergeJoin" not in plan
 
 
+@pytest.mark.usefixtures("above_one_partition_bound")
 def test_ingest_pipeline_staged_zero_corpus_exchange(spark, sf_smoke, tmp_path):
     """VERDICT r13 task 2, plan-pinned: against staged artifacts the
     nightly admission plan has ZERO corpus-wide Exchange — every shuffle

@@ -41,6 +41,33 @@ def test_default_cpus_follow_host_affinity():
     assert int(out) == len(os.sched_getaffinity(0))
 
 
+def test_driver_heap_default_follows_host_memory(spark, monkeypatch):
+    """Half of physical memory or of a smaller cgroup limit, capped at
+    24g; the test session got ``SPARK_GRAFT_DRIVER_MEM`` when set, else
+    that default."""
+    from gdutils_spark import session
+
+    page = 4096
+
+    def host(gib, limit=None):
+        pages = (gib << 30) // page
+        monkeypatch.setattr(
+            session.os, "sysconf",
+            lambda k: {"SC_PAGE_SIZE": page, "SC_PHYS_PAGES": pages}[k],
+        )
+        monkeypatch.setattr(session, "_cgroup_mem_limit", lambda: limit)
+        return session.host_driver_mem()
+
+    assert host(15) == "7680m"
+    assert host(48) == "24576m"
+    assert host(256) == "24576m"
+    assert host(15, limit=4 << 30) == "2048m"
+    assert host(15, limit=2**63 - 4096) == "7680m"  # v1 "no limit"
+    monkeypatch.undo()
+    expected = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or session.host_driver_mem()
+    assert spark.conf.get("spark.driver.memory") == expected
+
+
 def test_unresolved_column_error_names_column_with_debugging_off(spark):
     from pyspark.errors.utils import is_debugging_enabled
 

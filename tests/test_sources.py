@@ -165,6 +165,11 @@ def _next_job_id(spark) -> int:
     return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
 
 
+def _coalesced(df) -> bool:
+    """The table loaded through the single-partition gate."""
+    return "Repartition 1, false" in df._jdf.queryExecution().optimizedPlan().toString()
+
+
 def test_warm_load_table_starts_no_job(spark):
     from gdutils_spark.sources import tables
 
@@ -248,7 +253,8 @@ def test_memo_misses_when_inference_conf_changes(spark, tmp_path):
 
 
 def test_directory_table_still_loads(spark, tmp_path):
-    """A multi-file table directory keeps plain inference (no memo)."""
+    """A multi-file table directory keeps plain inference (no memo) and
+    its plain scan (no single-partition gate)."""
     from gdutils_spark.sources import tables
 
     d = str(tmp_path / "nums.parquet")
@@ -256,6 +262,7 @@ def test_directory_table_still_loads(spark, tmp_path):
     df = tables.load_table(spark, str(tmp_path), "nums")
     assert sorted(r.id for r in df.collect()) == list(range(10))
     assert not any(k[0] == os.path.realpath(d) for k in tables._schema_memo)
+    assert not _coalesced(df)
 
 
 def test_concurrent_loads_share_one_memo_entry_per_table(spark):
@@ -305,3 +312,102 @@ def test_load_table_leaves_session_conf_and_memo_keys_as_found(spark):
         keys.append(set(tables._schema_memo))
     assert keys[0] == keys[1]
     assert len(keys[0]) == len(tables.TABLES)
+
+
+# ---- one partition for small tables ----------------------------------------
+
+# the ten glider_requests of the benchmark, plus the CDC merge whose change
+# batch is one scan of a gated table
+_GATED_QUERIES = (
+    "calendar_ymd_events",
+    "calendar_ym_orders",
+    "calendar_slice_ym",
+    "daily_event_stats",
+    "yearly_counts",
+    "rt_dataset_profiles",
+    "rt_dataset_timeseries",
+    "rt_canned_filters",
+    "rt_plot_urls",
+    "rt_json_records_typed",
+    "orders_cdc_upsert",
+)
+
+
+def test_small_table_plans_no_exchange(spark):
+    """A gated table reports SinglePartition, which satisfies the
+    all-tuples, clustered and ordered distributions of a global count, a
+    keyed aggregate and a sort: none of them plans an Exchange."""
+    from pyspark.sql import functions as F
+
+    from gdutils_spark.sources.tables import load_table
+
+    o = load_table(spark, BENCH_SF, "orders")
+    assert _coalesced(o)
+    for df in (
+        o.groupBy().count(),
+        o.groupBy("o_orderstatus").agg(F.sum("o_totalprice")),
+        o.orderBy("o_totalprice"),
+    ):
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, plan
+
+
+def test_one_partition_gate_keeps_rows(spark, monkeypatch):
+    """Two configs, same rows: each query collects the same rows with the
+    gate on and with it off (``_ONE_PARTITION_MAX_BYTES = -1``)."""
+    from gdutils_spark.queries import QUERIES
+    from gdutils_spark.sources import tables
+
+    def run():
+        return {
+            name: sorted(map(repr, QUERIES[name](spark, BENCH_SF).collect()))
+            for name in _GATED_QUERIES
+        }
+
+    assert _coalesced(tables.load_table(spark, BENCH_SF, "orders"))
+    on = run()
+    monkeypatch.setattr(tables, "_ONE_PARTITION_MAX_BYTES", -1)
+    assert not _coalesced(tables.load_table(spark, BENCH_SF, "orders"))
+    off = run()
+    for name in _GATED_QUERIES:
+        assert on[name] and on[name] == off[name], name
+
+
+def test_file_over_the_bound_keeps_the_plain_scan(spark, monkeypatch):
+    from gdutils_spark.sources import tables
+
+    size = os.stat(os.path.join(BENCH_SF, "orders.parquet")).st_size
+    monkeypatch.setattr(tables, "_ONE_PARTITION_MAX_BYTES", size)
+    assert _coalesced(tables.load_table(spark, BENCH_SF, "orders"))
+    monkeypatch.setattr(tables, "_ONE_PARTITION_MAX_BYTES", size - 1)
+    assert not _coalesced(tables.load_table(spark, BENCH_SF, "orders"))
+
+
+def test_bound_gates_sf001_tables_and_no_sf01_fact_or_corpus_table(sf_correct):
+    """The bound's contract (sources/tables.py): the sf0.01 tables but
+    ``lineitem`` are gated, and at sf0.1 no fact or corpus table is."""
+    from gdutils_spark.sources import tables
+
+    for name in tables.TABLES:
+        st = os.stat(os.path.join(BENCH_SF, f"{name}.parquet"))
+        gated = st.st_size <= tables._ONE_PARTITION_MAX_BYTES
+        assert gated == (name != "lineitem"), name
+    sf01 = os.path.join(os.path.dirname(sf_correct), "sf0.1")
+    if not os.path.isdir(sf01):
+        pytest.skip("no sf0.1 test data")
+    for name in ("orders", "lineitem", "events", "documents", "embeddings"):
+        st = os.stat(os.path.join(sf01, f"{name}.parquet"))
+        assert st.st_size > tables._ONE_PARTITION_MAX_BYTES, name
+
+
+def test_warm_calendar_ym_orders_starts_one_job(spark):
+    """A warm calendar request plans no Exchange, so its collect is its
+    only job (4 with a shuffle stage per aggregate and sort)."""
+    from gdutils_spark.queries import QUERIES
+
+    q = QUERIES["calendar_ym_orders"]
+    q(spark, BENCH_SF).collect()  # cold: schema inference, codegen
+    j0 = _next_job_id(spark)
+    q(spark, BENCH_SF).collect()
+    assert _next_job_id(spark) - j0 == 1
