@@ -34,16 +34,21 @@ def _ship_package(spark: SparkSession) -> None:
     repo on sys.path; any pickled-by-reference function would fail to
     unpickle there. UDF closures are written self-contained, but this
     zip+addPyFile is the defense in depth (and what a real deployment
-    does with --py-files).
+    does with --py-files). Executors fetch the zip for as long as the
+    SparkContext lives, so its temporary directory goes at interpreter
+    exit, not on return.
     """
     key = spark.sparkContext.applicationId
     if key in _SHIPPED:
         return
+    import atexit
     import shutil
     import tempfile
 
     pkg_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "gdutils_spark")
-    zip_base = os.path.join(tempfile.mkdtemp(prefix="gdutils_spark_ship_"), "gdutils_spark")
+    ship_dir = tempfile.mkdtemp(prefix="gdutils_spark_ship_")
+    atexit.register(shutil.rmtree, ship_dir, ignore_errors=True)
+    zip_base = os.path.join(ship_dir, "gdutils_spark")
     archive = shutil.make_archive(zip_base, "zip", os.path.dirname(pkg_dir), "gdutils_spark")
     spark.sparkContext.addPyFile(archive)
     _SHIPPED.add(key)

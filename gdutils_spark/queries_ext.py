@@ -8,10 +8,7 @@ can never drift apart.
 
 from __future__ import annotations
 
-import atexit
-import functools
 import os
-import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -1359,20 +1356,6 @@ def emb_knn_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
 IVFPQ_SPLIT = 250  # base corpus = vec_id < SPLIT; the nightly delta appends
 
 
-def _rm_ivfpq_stage(stage: str) -> None:
-    """Remove a staged IVF-PQ index and its two sidecar directories."""
-    for suffix in ("", "_meta", "_quantizer"):
-        shutil.rmtree(stage + suffix, ignore_errors=True)
-
-
-@functools.cache
-def _rm_ivfpq_stage_at_exit(stage: str) -> None:
-    """Remove ``stage`` when the interpreter exits (registered once per
-    path). The DataFrame that reads the staged files is lazy, so they
-    cannot be removed before the caller is done with it."""
-    atexit.register(_rm_ivfpq_stage, stage)
-
-
 def emb_knn_ivfpq_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN nightly-ingest chain, end to end: stage an IVF-PQ index over
     the BASE corpus (vec_id < {split}), ``ivfpq_append`` the delta batch
@@ -1391,21 +1374,13 @@ def emb_knn_ivfpq_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = vectors.where(F.col("vec_id") < IVFPQ_SPLIT)
     delta = vectors.where(F.col("vec_id") >= IVFPQ_SPLIT)
     queries = vectors.where(F.col("vec_id") < N_QUERIES)
-    # deterministic per-PROCESS scratch, wiped at call start and at
-    # interpreter exit:
-    # same-process repeats (driver rounds, bench min-of-3) reuse one
-    # name, while a concurrent bench/pytest/drive process gets its own —
-    # without the pid a second process could rmtree this one's staged
-    # parquet mid-query. tmpfs-rooted like the rt fixtures (r15): the
-    # staged index is per-invocation scratch whose cost is small-file
-    # sync latency, and on tmpfs a leftover copy holds RAM
-    from gdutils_spark.queries_rt import _rt_tmp_root
+    # a fresh per-call scratch dir holds the index and its two sidecars
+    # (``<stage>_meta``, ``<stage>_quantizer``): the lazy result reads
+    # them, so they go at interpreter exit, and a second call cannot wipe
+    # what an earlier call's result still reads
+    from gdutils_spark.queries_rt import _work_dir
 
-    stage = os.path.join(
-        _rt_tmp_root(), f"gdutils_ivfpq_appended_{os.getpid()}"
-    )
-    _rm_ivfpq_stage(stage)
-    _rm_ivfpq_stage_at_exit(stage)
+    stage = os.path.join(_work_dir("ivfpq_appended"), "index")
     sim.ivfpq_index(
         base, n_centroids=IVF_CENTROIDS, m=PQ_M, n_codes=PQ_K,
         stage_path=stage,

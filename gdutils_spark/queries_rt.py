@@ -94,6 +94,43 @@ def _work_dir(name: str) -> str:
     return d
 
 
+def _drain(q, name: str) -> None:
+    """Wait up to 300 s for an availableNow query to drain what exists;
+    a query still running then is stopped, and a ``TimeoutError`` naming
+    the query ``name`` is raised."""
+    if not q.awaitTermination(300):
+        q.stop()
+        raise TimeoutError(f"{name}: streaming query did not finish")
+
+
+def _parquet_roundtrip(
+    spark: SparkSession,
+    name: str,
+    fixtures: tuple[DataFrame, ...],
+    build: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """The streaming queries' source→sink round trip: append each fixture
+    to a fresh file source (one append, one or more files, per fixture),
+    stream it through ``build`` into a parquet sink (append mode,
+    availableNow), drain, and read the sink back as a batch scan."""
+    tmp = _work_dir(name.removeprefix("rt_"))
+    src, chk, out = (os.path.join(tmp, d) for d in ("src", "chk", "out"))
+    for fixture in fixtures:
+        fixture.write.mode("append").parquet(src)
+    stream = spark.readStream.schema(fixtures[0].schema).parquet(src)
+    q = (
+        build(stream)
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", chk)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    _drain(q, name)
+    return spark.read.parquet(out)
+
+
 # ---------------------------------------------------------------------------
 # S9 + S6 + P3: offline CSV batch with units row and filename-derived ids
 # ---------------------------------------------------------------------------
@@ -757,24 +794,10 @@ def rt_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("user_id") < 30)
         .select("event_id", "user_id", "ts", "value")
     )
-    tmp = _work_dir("stream_dedup")
-    src, chk, out = (os.path.join(tmp, d) for d in ("src", "chk", "out"))
-    e.write.mode("append").parquet(src)
-    e.write.mode("append").parquet(src)
-    stream = spark.readStream.schema(e.schema).parquet(src)
-    dd = stream_dedup(stream, ["event_id"], time_col="ts")
-    q = (
-        dd.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", chk)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return _parquet_roundtrip(
+        spark, "rt_stream_dedup", (e, e),
+        lambda stream: stream_dedup(stream, ["event_id"], time_col="ts"),
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("rt_stream_dedup: streaming query did not finish")
-    return spark.read.parquet(out)
 
 
 _RT_STREAM_DEDUP_SQL = """
@@ -797,23 +820,12 @@ def rt_stream_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("user_id") < 30)
         .select("event_id", "ts")
     )
-    tmp = _work_dir("stream_daily")
-    src, chk, out = (os.path.join(tmp, d) for d in ("src", "chk", "out"))
-    e.write.mode("append").parquet(src)
-    stream = spark.readStream.schema(e.schema).parquet(src)
-    agg = stream_daily_stats(stream, time_col="ts", value_col=None, watermark="1 day")
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", chk)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    back = _parquet_roundtrip(
+        spark, "rt_stream_daily_counts", (e,),
+        lambda stream: stream_daily_stats(
+            stream, time_col="ts", value_col=None, watermark="1 day"
+        ),
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("rt_stream_daily_counts: streaming query did not finish")
-    back = spark.read.parquet(out)
     return back.select(
         F.col("window.start").alias("day_start"),
         F.col("window.end").alias("day_end"),
@@ -850,25 +862,13 @@ def rt_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("user_id") < 25)
         .select("user_id", "ts")
     )
-    tmp = _work_dir("stream_sessions")
-    src, chk, out = (os.path.join(tmp, d) for d in ("src", "chk", "out"))
-    e.write.mode("append").parquet(src)
-    stream = spark.readStream.schema(e.schema).parquet(src)
-    sess = stream_sessions(
-        stream, entity_col="user_id", time_col="ts", gap="30 minutes", watermark="1 day"
+    back = _parquet_roundtrip(
+        spark, "rt_stream_sessions", (e,),
+        lambda stream: stream_sessions(
+            stream, entity_col="user_id", time_col="ts", gap="30 minutes",
+            watermark="1 day",
+        ),
     )
-    q = (
-        sess.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", chk)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("rt_stream_sessions: streaming query did not finish")
-    back = spark.read.parquet(out)
     return back.select(
         "user_id",
         F.col("session.start").alias("session_start"),
@@ -956,9 +956,7 @@ def rt_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("rt_stream_stateful: streaming query did not finish")
+    _drain(q, "rt_stream_stateful")
     back = spark.read.parquet(out)
     final = back.groupBy("entity").agg(
         F.max_by(F.struct("start_time", "end_time", "n_events"), "n_events").alias("s")
@@ -996,26 +994,13 @@ def rt_stream_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("user_id") < 60)
         .select("user_id", "ts")
     )
-    tmp = _work_dir("stream_active")
-    src, chk, out = (os.path.join(tmp, d) for d in ("src", "chk", "out"))
-    e.write.mode("append").parquet(src)
-    stream = spark.readStream.schema(e.schema).parquet(src)
-    act = stream_active_entities(
-        stream, time_col="ts", entity_col="user_id", window="1 day",
-        watermark="1 day", exact=True,
+    back = _parquet_roundtrip(
+        spark, "rt_stream_active_users", (e,),
+        lambda stream: stream_active_entities(
+            stream, time_col="ts", entity_col="user_id", window="1 day",
+            watermark="1 day", exact=True,
+        ),
     )
-    q = (
-        act.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", chk)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("rt_stream_active_users: streaming query did not finish")
-    back = spark.read.parquet(out)
     return back.select(
         F.col("window.start").alias("day_start"),
         F.col("window.end").alias("day_end"),
@@ -1157,23 +1142,9 @@ def rt_stream_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = _png_media(
         load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 200)
     )
-    tmp = _work_dir("stream_media")
-    src, chk, out = (os.path.join(tmp, d) for d in ("src", "chk", "out"))
-    media.write.mode("append").parquet(src)
-    stream = spark.readStream.schema(media.schema).parquet(src)
-    feats = stream_media_features(stream)
-    q = (
-        feats.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", chk)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return _parquet_roundtrip(
+        spark, "rt_stream_media", (media,), stream_media_features
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("rt_stream_media: streaming query did not finish")
-    return spark.read.parquet(out)
 
 
 _RT_STREAM_MEDIA_SQL = """
@@ -1211,25 +1182,13 @@ def rt_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where(F.col("uid") % 3 != 0)  # leave holes → orphan path exercised
     )
-    tmp = _work_dir("stream_enrich")
-    src, chk, out = (os.path.join(tmp, d) for d in ("src", "chk", "out"))
-    e.write.mode("append").parquet(src)
-    stream = spark.readStream.schema(e.schema).parquet(src)
-    enriched = stream_enrich(stream, catalog, "user_id", "uid").select(
-        "user_id", "event_type", F.col("nation"), F.col("uid").isNull().alias("orphan")
+    back = _parquet_roundtrip(
+        spark, "rt_stream_enrich", (e,),
+        lambda stream: stream_enrich(stream, catalog, "user_id", "uid").select(
+            "user_id", "event_type", F.col("nation"),
+            F.col("uid").isNull().alias("orphan"),
+        ),
     )
-    q = (
-        enriched.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", chk)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("rt_stream_enrich: streaming query did not finish")
-    back = spark.read.parquet(out)
     return back.groupBy("nation", "event_type", "orphan").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.count_distinct("user_id").alias("n_users"),
@@ -1448,11 +1407,7 @@ def rt_stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_dir=snap,
         checkpoint=chk,
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "rt_stream_quantile_sketch: streaming query did not finish"
-        )
+    _drain(q, "rt_stream_quantile_sketch")
     return latest_sketch(spark, snap).select("bin", "cnt")
 
 
@@ -1514,11 +1469,7 @@ def rt_stream_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_dir=snap,
         checkpoint=chk,
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "rt_stream_weighted_sample: streaming query did not finish"
-        )
+    _drain(q, "rt_stream_weighted_sample")
     return latest_sketch(spark, snap).select(
         F.col("id").alias("doc_id"),
         F.col("weight").alias("n_tokens"),
@@ -1532,6 +1483,42 @@ def _stream_wsample_sql() -> str:
     return _weighted_sample_sql()
 
 
+def _click_purchase_join(
+    spark: SparkSession, sf_dir: str, name: str, **join_kw
+) -> DataFrame:
+    """The click→purchase attribution round trip of the three
+    stream-stream join queries: events of users below 60 stream once,
+    split into a click and a purchase stream, which
+    ``stream_stream_join(**join_kw)`` joins on user within 6 hours."""
+    from gdutils_spark.streaming import stream_stream_join
+
+    e = (
+        load_table(spark, sf_dir, "events")
+        .where(F.col("user_id") < 60)
+        .select("user_id", "event_type", "ts", "event_id")
+    )
+
+    def side(stream: DataFrame, kind: str) -> DataFrame:
+        return stream.where(F.col("event_type") == kind).select(
+            "user_id",
+            F.col("ts").alias(f"{kind}_ts"),
+            F.col("event_id").alias(f"{kind}_id"),
+        )
+
+    def build(stream: DataFrame) -> DataFrame:
+        return stream_stream_join(
+            side(stream, "click"),
+            side(stream, "purchase"),
+            key="user_id",
+            left_time="click_ts",
+            right_time="purchase_ts",
+            max_delay="6 hours",
+            **join_kw,
+        ).select("user_id", "click_id", "purchase_id")
+
+    return _parquet_roundtrip(spark, name, (e,), build)
+
+
 @_state_sized_shuffle
 def rt_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-STREAM interval join driver-verified end-to-end: the
@@ -1541,47 +1528,7 @@ def rt_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     expires), append-sink to parquet, read back. The oracle is the plain
     batch interval join: a dropped or duplicated match (the failure
     modes of stream-stream state management) changes the row set."""
-    from gdutils_spark.streaming import stream_stream_join
-
-    e = (
-        load_table(spark, sf_dir, "events")
-        .where(F.col("user_id") < 60)
-        .select("user_id", "event_type", "ts", "event_id")
-    )
-    tmp = _work_dir("stream_ss_join")
-    src, chk, out = (os.path.join(tmp, d) for d in ("src", "chk", "out"))
-    e.write.mode("append").parquet(src)
-    stream = spark.readStream.schema(e.schema).parquet(src)
-    clicks = stream.where(F.col("event_type") == "click").select(
-        "user_id",
-        F.col("ts").alias("click_ts"),
-        F.col("event_id").alias("click_id"),
-    )
-    purchases = stream.where(F.col("event_type") == "purchase").select(
-        "user_id",
-        F.col("ts").alias("purchase_ts"),
-        F.col("event_id").alias("purchase_id"),
-    )
-    joined = stream_stream_join(
-        clicks,
-        purchases,
-        key="user_id",
-        left_time="click_ts",
-        right_time="purchase_ts",
-        max_delay="6 hours",
-    ).select("user_id", "click_id", "purchase_id")
-    q = (
-        joined.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", chk)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("rt_stream_stream_join: streaming query did not finish")
-    return spark.read.parquet(out)
+    return _click_purchase_join(spark, sf_dir, "rt_stream_stream_join")
 
 
 @_state_sized_shuffle
@@ -1598,51 +1545,10 @@ def rt_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary case in ``test_streaming.py``). A dropped match, duplicated
     match, early null emission (row later matched = wrong), or missed
     null emission all change the row set."""
-    from gdutils_spark.streaming import stream_stream_join
-
-    e = (
-        load_table(spark, sf_dir, "events")
-        .where(F.col("user_id") < 60)
-        .select("user_id", "event_type", "ts", "event_id")
-    )
-    tmp = _work_dir("stream_ss_left_join")
-    src, chk, out = (os.path.join(tmp, d) for d in ("src", "chk", "out"))
-    e.write.mode("append").parquet(src)
-    stream = spark.readStream.schema(e.schema).parquet(src)
-    clicks = stream.where(F.col("event_type") == "click").select(
-        "user_id",
-        F.col("ts").alias("click_ts"),
-        F.col("event_id").alias("click_id"),
-    )
-    purchases = stream.where(F.col("event_type") == "purchase").select(
-        "user_id",
-        F.col("ts").alias("purchase_ts"),
-        F.col("event_id").alias("purchase_id"),
-    )
-    joined = stream_stream_join(
-        clicks,
-        purchases,
-        key="user_id",
-        left_time="click_ts",
-        right_time="purchase_ts",
-        max_delay="6 hours",
-        watermark="1 hour",
+    return _click_purchase_join(
+        spark, sf_dir, "rt_stream_stream_left_join", watermark="1 hour",
         how="left_outer",
-    ).select("user_id", "click_id", "purchase_id")
-    q = (
-        joined.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", chk)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "rt_stream_stream_left_join: streaming query did not finish"
-        )
-    return spark.read.parquet(out)
 
 
 @_state_sized_shuffle
@@ -1659,51 +1565,10 @@ def rt_stream_stream_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch full interval join with BOTH watermark cuts encoded —
     a dropped/duplicated match or an early/missed null emission on
     either side changes the row set."""
-    from gdutils_spark.streaming import stream_stream_join
-
-    e = (
-        load_table(spark, sf_dir, "events")
-        .where(F.col("user_id") < 60)
-        .select("user_id", "event_type", "ts", "event_id")
-    )
-    tmp = _work_dir("stream_ss_full_join")
-    src, chk, out = (os.path.join(tmp, d) for d in ("src", "chk", "out"))
-    e.write.mode("append").parquet(src)
-    stream = spark.readStream.schema(e.schema).parquet(src)
-    clicks = stream.where(F.col("event_type") == "click").select(
-        "user_id",
-        F.col("ts").alias("click_ts"),
-        F.col("event_id").alias("click_id"),
-    )
-    purchases = stream.where(F.col("event_type") == "purchase").select(
-        "user_id",
-        F.col("ts").alias("purchase_ts"),
-        F.col("event_id").alias("purchase_id"),
-    )
-    joined = stream_stream_join(
-        clicks,
-        purchases,
-        key="user_id",
-        left_time="click_ts",
-        right_time="purchase_ts",
-        max_delay="6 hours",
-        watermark="1 hour",
+    return _click_purchase_join(
+        spark, sf_dir, "rt_stream_stream_full_join", watermark="1 hour",
         how="full_outer",
-    ).select("user_id", "click_id", "purchase_id")
-    q = (
-        joined.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", chk)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "rt_stream_stream_full_join: streaming query did not finish"
-        )
-    return spark.read.parquet(out)
 
 
 _RT_STREAM_SS_FULL_JOIN_SQL = """
@@ -1867,9 +1732,7 @@ def rt_stream_gap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_dir=snap,
         checkpoint=chk,
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("rt_stream_gap_report: streaming query did not finish")
+    _drain(q, "rt_stream_gap_report")
     return gap_report_from_registers(latest_sketch(spark, snap), GAP_THR_S)
 
 

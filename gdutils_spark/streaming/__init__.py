@@ -242,7 +242,6 @@ def stream_to_partitioned_parquet(
     checkpoint: str,
     time_col: str = "ts",
     partition_col: str = "date",
-    available_now: bool = True,
 ):
     """Ingestion into the hive-partitioned staging layout
     (``sources.staging.stage_partitioned``): each micro-batch appends to
@@ -251,25 +250,20 @@ def stream_to_partitioned_parquet(
     cron-poll-then-save loop (``/root/reference/scripts/dac/
     search_datasets.py:89-92``) as one query.
 
-    ``available_now=True`` (default) DRAINS what exists and stops — the
-    catch-up / backfill / test shape; pass ``False`` for the always-on
-    continuous ingest (the query then runs until stopped; with the
-    default a file arriving after start() would silently never be
-    staged). Same knob convention as ``stream_apply_cdc``.
-
-    Returns the started ``StreamingQuery`` (caller owns stop/await).
-    Append is idempotent per micro-batch via the checkpoint's batch-id
-    tracking; exactly-once within one query lifetime."""
+    The query drains what exists and stops (``availableNow``): each call
+    is one poll of the loop. Returns the started ``StreamingQuery``
+    (caller owns await). Append is idempotent per micro-batch via the
+    checkpoint's batch-id tracking; exactly-once within one query
+    lifetime."""
     with_date = stream.withColumn(partition_col, F.to_date(F.col(time_col)))
-    writer = (
+    return (
         with_date.writeStream.format("parquet")
         .option("path", path)
         .option("checkpointLocation", checkpoint)
         .partitionBy(partition_col)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_media_features(stream: DataFrame) -> DataFrame:
@@ -590,6 +584,54 @@ def _resolve_base(sess, snapshot_dir: str, batch_id: int, initial, empty):
     return initial if initial is not None else empty
 
 
+def _versioned_snapshot_writer(
+    stream: DataFrame, snapshot_dir: str, checkpoint: str, fold
+):
+    """The versioned-snapshot protocol, owned once for every writer that
+    maintains ``snapshot_dir/v=<batch_id>`` from a stream: each
+    micro-batch resolves its base (the latest committed version below
+    its id, or ``None`` on a fresh history; :func:`_resolve_base`),
+    ``fold(batch, base) -> DataFrame`` builds the next version, and the
+    result is written as ``v=<batch_id>`` (the micro-batch id is the
+    commit id). Readers pick the highest committed version.
+
+    * The checkpoint-identity guard runs once per run, BEFORE the
+      committed-version skip: with a recreated checkpoint (batch ids
+      restarted over old history) the skip would silently drop every new
+      batch whose id collides with an old version
+      (:func:`_guard_checkpoint_identity`).
+    * A replayed batch whose version is already committed (the crash
+      landed between the parquet commit and the checkpoint commit) is
+      skipped: ``fold`` is a deterministic function of (base, batch
+      rows), so the durable output is already correct, and a committed
+      version stays immutable for concurrent readers.
+    * A replayed batch whose version is uncommitted re-derives it from
+      its predecessor; a half-written directory is never a base.
+
+    The query drains what exists and stops (``availableNow``); returns
+    the started ``StreamingQuery`` (caller owns await)."""
+    identity_ok = []  # per-run memo: the lineage can't change mid-run
+
+    def apply_batch(batch: DataFrame, batch_id: int) -> None:
+        sess = batch.sparkSession
+        if not identity_ok:
+            _guard_checkpoint_identity(sess, snapshot_dir, checkpoint)
+            identity_ok.append(True)
+        if _version_committed(sess, snapshot_dir, batch_id):
+            return
+        base = _resolve_base(sess, snapshot_dir, batch_id, None, None)
+        fold(batch, base).write.mode("overwrite").parquet(
+            f"{snapshot_dir}/v={batch_id}"
+        )
+
+    return (
+        stream.writeStream.foreachBatch(apply_batch)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def stream_apply_cdc(
     changes: DataFrame,
     snapshot_dir: str,
@@ -598,82 +640,40 @@ def stream_apply_cdc(
     op_col: str = "op",
     seq_col: str | None = None,
     initial: DataFrame | None = None,
-    available_now: bool = True,
 ):
     """Continuous MERGE INTO: a CDC change stream maintains a VERSIONED
     parquet snapshot — each micro-batch applies
     :func:`~gdutils_spark.operators.cdc.apply_cdc` to the latest
-    snapshot version and writes ``snapshot_dir/v=<batch_id>`` (what a
-    lakehouse table format does internally, with the micro-batch id as
-    the commit id). Readers pick the highest version for a consistent
-    view; old versions are time travel until vacuumed.
+    committed snapshot version (``initial``, or an empty table, on a
+    fresh history) and commits ``snapshot_dir/v=<batch_id>`` through
+    :func:`_versioned_snapshot_writer` (what a lakehouse table format
+    does internally, with the micro-batch id as the commit id). Old
+    versions are time travel until vacuumed.
 
-    Idempotent per micro-batch: a replayed batch whose version is
-    ALREADY committed (``_SUCCESS`` present — the crash landed between
-    the parquet commit and the checkpoint commit) is skipped outright,
-    so a committed version is IMMUTABLE and concurrent readers following
-    the highest-committed-version rule never see their directory
-    deleted under them; a replayed batch whose version is uncommitted
-    re-derives it from the PREDECESSOR (the base lookup ignores
-    versions at or past the replayed id, and only ``_SUCCESS``-marked
-    versions count as a base, so a half-written directory is never read
-    back). RETENTION RULE for vacuuming: a version must survive until
-    the NEXT checkpoint commit is durable — vacuum anything older
-    freely; vacuuming the immediate predecessor of an in-flight batch
-    (or recreating the checkpoint dir over existing history) raises
-    instead of silently rebuilding from ``initial`` and discarding
-    every applied batch. The committed-version skip is additionally
-    gated on a checkpoint-identity marker
-    (``<snapshot_dir>/_checkpoint_id``, the engine's persistent query
-    id): a recreated checkpoint restarts batch ids at 0, which would
-    otherwise make every new batch look like a replay of old history
-    and be dropped WITHOUT error — the marker mismatch raises on the
-    first batch instead (:func:`_guard_checkpoint_identity`). Version
-    listing goes through the Hadoop FileSystem API so any
-    HDFS-compatible store works. Each version is
-    a full copy-on-write snapshot — at 100 TB you'd partition the
-    snapshot and rewrite only touched partitions; the merge itself
-    already only shuffles on the key.
+    RETENTION RULE for vacuuming: a version must survive until the NEXT
+    checkpoint commit is durable — vacuum anything older freely;
+    vacuuming the immediate predecessor of an in-flight batch (or
+    recreating the checkpoint dir over existing history) raises instead
+    of silently rebuilding from ``initial`` and discarding every applied
+    batch. Version listing goes through the Hadoop FileSystem API so any
+    HDFS-compatible store works. Each version is a full copy-on-write
+    snapshot — at 100 TB you'd partition the snapshot and rewrite only
+    touched partitions; the merge itself already only shuffles on the
+    key.
 
-    Returns the started ``StreamingQuery`` (caller owns stop/await).
+    Drains what exists and stops; returns the started ``StreamingQuery``
+    (caller owns await).
     """
     from gdutils_spark.operators.cdc import apply_cdc
 
     payload = [c for c in changes.columns if c not in (op_col, seq_col)]
-    identity_ok = []  # per-run memo: the lineage can't change mid-run
 
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        sess = batch.sparkSession
-        if not identity_ok:
-            # BEFORE the committed-version skip: with a recreated
-            # checkpoint (batch ids restarted over old history) the skip
-            # below would silently drop every new batch whose id
-            # collides with an old version — the identity marker proves
-            # the committed versions belong to THIS checkpoint lineage
-            _guard_checkpoint_identity(sess, snapshot_dir, checkpoint)
-            identity_ok.append(True)
-        if _version_committed(sess, snapshot_dir, batch_id):
-            # crash landed between this version's parquet commit and the
-            # checkpoint commit: the merge is a deterministic function of
-            # (predecessor, batch rows), so the durable output is already
-            # correct — skipping the rewrite keeps _SUCCESS ⇒ immutable
-            # for concurrent readers (an in-place overwrite would delete
-            # a directory a reader following the documented
-            # highest-committed-version rule may be scanning)
-            return
-        current = _resolve_base(
-            sess, snapshot_dir, batch_id, initial,
-            batch.select(*payload).limit(0),
-        )
-        merged = apply_cdc(current, batch, keys, op_col=op_col, seq_col=seq_col)
-        merged.write.mode("overwrite").parquet(f"{snapshot_dir}/v={batch_id}")
+    def fold(batch: DataFrame, base: DataFrame | None) -> DataFrame:
+        if base is None:
+            base = batch.select(*payload).limit(0) if initial is None else initial
+        return apply_cdc(base, batch, keys, op_col=op_col, seq_col=seq_col)
 
-    writer = changes.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _versioned_snapshot_writer(changes, snapshot_dir, checkpoint, fold)
 
 
 def stream_merge_sketch(
@@ -682,7 +682,6 @@ def stream_merge_sketch(
     merge,
     snapshot_dir: str,
     checkpoint: str,
-    available_now: bool = True,
 ):
     """Continuous MERGEABLE-SKETCH maintenance: each micro-batch folds
     into its own sketch (``build(batch) -> DataFrame``) and merges with
@@ -698,56 +697,25 @@ def stream_merge_sketch(
     sketch-sized work regardless of how much history the sketch
     summarizes.
 
-    Crash-replay safety is inherited from the versioned-snapshot
-    protocol of :func:`stream_apply_cdc` (via
-    :func:`snapshot_base_version`): a replayed batch re-merges onto its
-    PREDECESSOR version, never its own partial output, and only
-    ``_SUCCESS``-committed versions count as a base. NOTE the replay
-    contract this imposes on ``build``/``merge``: the pair must be
-    deterministic functions of the batch ROWS (true for every sketch
-    here — md5 hashing, integer counters), so a replayed batch produces
-    the identical sketch and the re-merge converges to the same
-    version.
+    Crash-replay safety is the versioned-snapshot protocol shared with
+    :func:`stream_apply_cdc` (:func:`_versioned_snapshot_writer`): a
+    replayed batch re-merges onto its PREDECESSOR version, never its own
+    partial output, and only ``_SUCCESS``-committed versions count as a
+    base. NOTE the replay contract this imposes on ``build``/``merge``:
+    the pair must be deterministic functions of the batch ROWS (true for
+    every sketch here — md5 hashing, integer counters), so a replayed
+    batch produces the identical sketch and the re-merge converges to
+    the same version.
 
-    Returns the started ``StreamingQuery`` (caller owns stop/await).
+    Drains what exists and stops; returns the started ``StreamingQuery``
+    (caller owns await).
     """
 
-    identity_ok = []  # per-run memo: the lineage can't change mid-run
-
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        sess = batch.sparkSession
-        if not identity_ok:
-            # before the skip — see stream_apply_cdc: a recreated
-            # checkpoint over old history must raise, not silently drop
-            _guard_checkpoint_identity(sess, snapshot_dir, checkpoint)
-            identity_ok.append(True)
-        if _version_committed(sess, snapshot_dir, batch_id):
-            # deterministic build/merge (the documented replay contract)
-            # means the already-committed output is correct — skip, so
-            # _SUCCESS ⇒ immutable holds for concurrent readers
-            return
+    def fold(batch: DataFrame, base: DataFrame | None) -> DataFrame:
         cur = build(batch)
-        v = snapshot_base_version(sess, snapshot_dir, batch_id)
-        if v is not None:
-            prev = sess.read.parquet(f"{snapshot_dir}/v={v}")
-            cur = merge(prev, cur)
-        elif batch_id > 0 or snapshot_base_version(
-            sess, snapshot_dir, before=1 << 62
-        ) is not None:
-            raise RuntimeError(
-                f"versioned snapshot {snapshot_dir}: no committed base "
-                f"before batch {batch_id} — predecessor vacuumed too "
-                "early or checkpoint recreated over existing history; "
-                "a fresh fold would silently discard merged sketches"
-            )
-        cur.write.mode("overwrite").parquet(f"{snapshot_dir}/v={batch_id}")
+        return cur if base is None else merge(base, cur)
 
-    writer = stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _versioned_snapshot_writer(stream, snapshot_dir, checkpoint, fold)
 
 
 def latest_sketch(spark, snapshot_dir: str):

@@ -1046,15 +1046,19 @@ import os, sys
 from gdutils_spark.queries_ext import emb_knn_ivfpq_appended
 from gdutils_spark.session import get_spark
 spark = get_spark("ivfpq-scratch", cpus=2)
-assert emb_knn_ivfpq_appended(spark, sys.argv[1]).count() > 0
+first = emb_knn_ivfpq_appended(spark, sys.argv[1])
+second = emb_knn_ivfpq_appended(spark, sys.argv[1])
+n = second.count()
+assert n > 0 and first.count() == n
 print(sorted(os.listdir(os.environ["SPARK_GRAFT_RT_TMPDIR"])))
 """
 
 
 def test_ivfpq_appended_scratch_removed_at_exit(sf_smoke, tmp_path):
-    """emb_knn_ivfpq_appended stages its index under a pid-keyed scratch
-    path that its lazy result reads, so it can only go at interpreter
-    exit: a finished process leaves none of the three directories."""
+    """emb_knn_ivfpq_appended stages its index and both sidecars in a
+    fresh scratch dir per call that its lazy result reads: a second call
+    leaves the first call's result readable, and a finished process
+    leaves no scratch behind."""
     import os
     import subprocess
     import sys
@@ -1067,5 +1071,5 @@ def test_ivfpq_appended_scratch_removed_at_exit(sf_smoke, tmp_path):
     )
     assert out.returncode == 0, out.stderr[-2000:]
     staged = out.stdout.strip().splitlines()[-1]
-    assert "gdutils_ivfpq_appended_" in staged  # present while running
+    assert staged.count("gdutils_rt_ivfpq_appended_") == 2  # present while running
     assert os.listdir(tmp_path) == []

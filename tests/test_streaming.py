@@ -857,68 +857,107 @@ def test_checkpoint_identity_guard_unit(spark, tmp_path):
     _guard_checkpoint_identity(spark, snap, str(tmp_path / "nochk"))
 
 
-def test_stream_apply_cdc_recreated_checkpoint_fails_not_drops(
-    spark, sf_smoke, tmp_path
-):
-    """The ADVICE r8 hole, end to end: after a successful run, wiping
-    the CHECKPOINT (not the snapshot) and streaming NEW changes must
-    FAIL the query — before the identity marker, batch 0's changes were
-    silently swallowed by the committed-version skip (v=0 existed from
-    the old lineage) and the snapshot stayed stale with no error."""
-    import shutil
-
-    import pytest
-
+# Each versioned-snapshot writer below gives ``(start, batch)``:
+# ``start(stream, snap, chk)`` starts the streaming writer, and
+# ``batch(b1, b2)`` folds two change batches in batch mode, which the
+# second committed version must equal.
+def _cdc_writer(o):
     from gdutils_spark.streaming import stream_apply_cdc
 
+    def start(stream, snap, chk):
+        return stream_apply_cdc(stream, snap, chk, keys=["o_orderkey"], initial=o)
+
+    def batch(b1, b2):
+        from gdutils_spark.operators.cdc import apply_cdc
+
+        return apply_cdc(
+            apply_cdc(o, b1, ["o_orderkey"]), b2, ["o_orderkey"]
+        )
+
+    return start, batch
+
+
+def _sketch_writer(o):
+    from gdutils_spark.operators.sketches import hist_merge, hist_registers
+    from gdutils_spark.streaming import stream_merge_sketch
+
+    def build(df):
+        return hist_registers(df, "o_totalprice", 0.0, 500_000.0, 20)
+
+    def start(stream, snap, chk):
+        return stream_merge_sketch(
+            stream, build=build, merge=hist_merge, snapshot_dir=snap,
+            checkpoint=chk,
+        )
+
+    def batch(b1, b2):
+        return hist_merge(build(b1), build(b2))
+
+    return start, batch
+
+
+_SNAPSHOT_WRITERS = pytest.mark.parametrize(
+    "writer", [_cdc_writer, _sketch_writer],
+    ids=["stream_apply_cdc", "stream_merge_sketch"],
+)
+
+
+@_SNAPSHOT_WRITERS
+def test_snapshot_writer_recreated_checkpoint_fails_not_drops(
+    spark, sf_smoke, tmp_path, writer
+):
+    """The ADVICE r8 hole, end to end, for both versioned-snapshot
+    writers: after a successful run, wiping the CHECKPOINT (not the
+    snapshot) and streaming NEW rows must FAIL the query — before the
+    identity marker, batch 0's rows were silently swallowed by the
+    committed-version skip (v=0 existed from the old lineage) and the
+    snapshot stayed stale with no error."""
     o = load_table(spark, sf_smoke, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
+    start, _ = writer(o)
     src, chk, snap = (str(tmp_path / d) for d in ("src", "chk", "snap"))
     b1 = o.where(F.col("o_orderkey") % 10 == 0).withColumn("op", F.lit("D"))
     b1.coalesce(1).write.mode("append").parquet(src)
     stream = spark.readStream.schema(b1.schema).parquet(src)
-    q = stream_apply_cdc(stream, snap, chk, keys=["o_orderkey"], initial=o)
-    assert q.awaitTermination(120)
+    assert start(stream, snap, chk).awaitTermination(120)
     # operator error: recreate the checkpoint, keep the snapshot
     shutil.rmtree(chk)
     b2 = o.where(F.col("o_orderkey") % 10 == 1).withColumn("op", F.lit("D"))
     b2.coalesce(1).write.mode("append").parquet(src)
     stream2 = spark.readStream.schema(b1.schema).parquet(src)
-    q2 = stream_apply_cdc(stream2, snap, chk, keys=["o_orderkey"], initial=o)
+    q2 = start(stream2, snap, chk)
     with pytest.raises(Exception, match="versioned snapshot"):
         q2.awaitTermination(120)
 
 
-def test_stream_apply_cdc_same_checkpoint_restart_appends(
-    spark, sf_smoke, tmp_path
+@_SNAPSHOT_WRITERS
+def test_snapshot_writer_same_checkpoint_restart_appends(
+    spark, sf_smoke, tmp_path, writer
 ):
-    """The healthy restart path still works under the identity guard: a
-    SECOND run over the same checkpoint (same query id) picks up new
-    files and appends the next version."""
+    """The healthy restart path still works under the identity guard,
+    for both versioned-snapshot writers: a SECOND run over the same
+    checkpoint (same query id) picks up new files and appends the next
+    version, which equals folding both batches in batch mode."""
     import glob
-
-    from gdutils_spark.streaming import stream_apply_cdc
 
     o = load_table(spark, sf_smoke, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
+    start, batch = writer(o)
     src, chk, snap = (str(tmp_path / d) for d in ("src", "chk", "snap"))
     b1 = o.where(F.col("o_orderkey") % 10 == 0).withColumn("op", F.lit("D"))
     b1.coalesce(1).write.mode("append").parquet(src)
     stream = spark.readStream.schema(b1.schema).parquet(src)
-    q = stream_apply_cdc(stream, snap, chk, keys=["o_orderkey"], initial=o)
-    assert q.awaitTermination(120)
+    assert start(stream, snap, chk).awaitTermination(120)
     b2 = o.where(F.col("o_orderkey") % 10 == 1).withColumn("op", F.lit("D"))
     b2.coalesce(1).write.mode("append").parquet(src)
     stream2 = spark.readStream.schema(b1.schema).parquet(src)
-    q2 = stream_apply_cdc(stream2, snap, chk, keys=["o_orderkey"], initial=o)
-    assert q2.awaitTermination(120)
+    assert start(stream2, snap, chk).awaitTermination(120)
     versions = sorted(glob.glob(snap + "/v=*"))
     assert len(versions) == 2
     final = spark.read.parquet(versions[-1])
-    assert final.where("o_orderkey % 10 = 1").count() == 0
-    assert final.where("o_orderkey % 10 = 0").count() == 0
+    assert sorted(final.collect()) == sorted(batch(b1, b2).collect())
 
 
 def test_stream_active_entities_exact_skips_null_entity(spark, tmp_path):
@@ -974,27 +1013,58 @@ def test_rt_work_dirs_are_per_invocation(spark, sf_smoke, tmp_path, monkeypatch)
 
 _RT_SCRIPT = """
 import os, sys
-from gdutils_spark.queries_rt import rt_csv_batch_daily
+import __spark_entry__ as se
 from gdutils_spark.session import get_spark
 spark = get_spark("rt-scratch", cpus=2)
-assert rt_csv_batch_daily(spark, sys.argv[1]).count() > 0
+assert se.queries()["rt_csv_batch_daily"](spark, sys.argv[1]).count() > 0
 print(sorted(os.listdir(os.environ["SPARK_GRAFT_RT_TMPDIR"])))
+print(sorted(os.listdir(os.environ["TMPDIR"])))
 """
 
 
 def test_rt_work_dirs_removed_at_exit(sf_smoke, tmp_path):
-    """The round-trip scratch lives as long as the lazy result may read it,
-    and goes at interpreter exit: a finished process leaves none."""
+    """The round-trip scratch and the package zip the driver adapter
+    ships to executors live as long as the session may read them, and go
+    at interpreter exit: a finished process leaves none."""
     import os
     import subprocess
     import sys
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    env = dict(os.environ, SPARK_GRAFT_RT_TMPDIR=str(tmp_path))
+    rt, tmp = tmp_path / "rt", tmp_path / "tmp"
+    rt.mkdir()
+    tmp.mkdir()
+    env = dict(os.environ, SPARK_GRAFT_RT_TMPDIR=str(rt), TMPDIR=str(tmp))
     out = subprocess.run(
         [sys.executable, "-c", _RT_SCRIPT, sf_smoke],
         cwd=repo, env=env, capture_output=True, text=True, timeout=600,
     )
     assert out.returncode == 0, out.stderr[-2000:]
-    assert "gdutils_rt_csv_batch_" in out.stdout.strip().splitlines()[-1]
-    assert os.listdir(tmp_path) == []
+    rt_live, tmp_live = out.stdout.strip().splitlines()[-2:]
+    assert "gdutils_rt_csv_batch_" in rt_live
+    assert "gdutils_spark_ship_" in tmp_live  # present while running
+    assert os.listdir(rt) == []
+    assert not [d for d in os.listdir(tmp) if d.startswith("gdutils_spark_ship_")]
+
+
+def test_drain_stops_and_raises_on_timeout():
+    """The drain's timeout path, without Spark: a query that has not
+    finished within the bound is stopped, and the error names it."""
+    from gdutils_spark.queries_rt import _drain
+
+    class StuckQuery:
+        stopped = False
+
+        def awaitTermination(self, timeout):
+            self.timeout = timeout
+            return False
+
+        def stop(self):
+            self.stopped = True
+
+    q = StuckQuery()
+    with pytest.raises(
+        TimeoutError, match="^rt_stream_dedup: streaming query did not finish$"
+    ):
+        _drain(q, "rt_stream_dedup")
+    assert q.stopped and q.timeout == 300
