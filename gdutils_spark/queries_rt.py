@@ -12,6 +12,13 @@ the oracle reproduces them in pure SQL.
 Reference parity targets are cited per query (the reference file the
 surface re-expresses); the round-trip *fixture* scaffolding is test
 machinery, the verified operator is the distributed read/assembly path.
+
+The streaming queries (``rt_stream_*``) drain availableNow streams. The
+stateful ones start through :func:`_start_state_sized`, which gives each
+stream one state-store partition per ``tables._ONE_PARTITION_MAX_BYTES``
+of source (1 on every fixture here) instead of the session's shuffle
+width; the sketch queries hold no state store and run at the session's
+width.
 """
 
 from __future__ import annotations
@@ -28,6 +35,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from gdutils_spark.client import GdacClient
 from gdutils_spark.operators.filters import filter_real_time_active
@@ -35,38 +43,10 @@ from gdutils_spark.operators.joins import semi_by_ids
 from gdutils_spark.session import scoped_conf
 from gdutils_spark.sinks.geojson import track_geojson, track_points
 from gdutils_spark.sinks.kml import tracks_to_kml
+from gdutils_spark.sources import tables
 from gdutils_spark.sources.csv import read_dataset_csv_batch
 from gdutils_spark.sources.rest import read_json_records
 from gdutils_spark.sources.tables import load_table
-
-# Shuffle-partition count for the STREAMING registry queries. Stateful
-# micro-batch operators create and commit one state-store instance per
-# shuffle partition per operator per micro-batch — pure fixed overhead
-# when the state is key-bounded and tiny (these pipelines hold at most a
-# few hundred keys). Measured at sf0.1 (tools/streaming_overhead_probe.py,
-# SCALE.md r10 audit): the stream-stream join is 0.34 s of real work
-# inside ~4.9 s wall at 32 partitions, and 1.6 s at 4 — ~3.2 s is
-# state-store instance churn. At 100 TB this constant is the knob you
-# SIZE TO STATE VOLUME (state bytes / healthy-store size), not a magic
-# number; the result set is partition-invariant (probe-asserted).
-_STREAM_STATE_PARTITIONS = 8
-
-
-def _state_sized_shuffle(fn):
-    """Run a streaming registry query with shuffle partitions sized to
-    its tiny state (``_STREAM_STATE_PARTITIONS``) in a ``scoped_conf``.
-    The returned DataFrame is a batch read-back of the sink directory, a
-    narrow file scan that does not depend on the restored conf."""
-    import functools
-
-    @functools.wraps(fn)
-    def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        parts = {"spark.sql.shuffle.partitions": str(_STREAM_STATE_PARTITIONS)}
-        with scoped_conf(spark, parts):
-            return fn(spark, sf_dir)
-
-    return wrapped
-
 
 def _rt_tmp_root() -> str:
     """Root for round-trip fixture/checkpoint scratch: tmpfs
@@ -103,31 +83,51 @@ def _drain(q, name: str) -> None:
         raise TimeoutError(f"{name}: streaming query did not finish")
 
 
+def _start_state_sized(
+    spark: SparkSession, writer: DataStreamWriter, src: str
+) -> StreamingQuery:
+    """Start ``writer`` with one shuffle partition, and so one state-store
+    instance per stateful operator, per ``tables._ONE_PARTITION_MAX_BYTES``
+    of source under ``src``: at least 1, at most the session's
+    ``spark.sql.shuffle.partitions``. Each instance is created and
+    committed in every micro-batch, so a few hundred keys spread over a
+    fixed width pay for empty stores. The count is scoped to ``start()``
+    alone: the query clones the session conf there, and a drain must not
+    hold the scope, since the stream thread and its ``foreachBatch`` may
+    enter one."""
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    bound = tables._ONE_PARTITION_MAX_BYTES
+    nbytes = sum(
+        os.path.getsize(os.path.join(d, f)) for d, _, fs in os.walk(src) for f in fs
+    )
+    n = min(cap, max(1, -(-nbytes // bound)))
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(n)}):
+        return writer.start()
+
+
 def _parquet_roundtrip(
     spark: SparkSession,
     name: str,
-    fixtures: tuple[DataFrame, ...],
+    fixture: DataFrame,
     build: Callable[[DataFrame], DataFrame],
 ) -> DataFrame:
-    """The streaming queries' source→sink round trip: append each fixture
-    to a fresh file source (one append, one or more files, per fixture),
-    stream it through ``build`` into a parquet sink (append mode,
-    availableNow), drain, and read the sink back as a batch scan."""
+    """The streaming queries' source→sink round trip: write ``fixture``
+    to a fresh file source (one file per partition), stream it through
+    ``build`` into a parquet sink (append mode, availableNow, state sized
+    to the source), drain, and read the sink back as a batch scan."""
     tmp = _work_dir(name.removeprefix("rt_"))
     src, chk, out = (os.path.join(tmp, d) for d in ("src", "chk", "out"))
-    for fixture in fixtures:
-        fixture.write.mode("append").parquet(src)
-    stream = spark.readStream.schema(fixtures[0].schema).parquet(src)
-    q = (
+    fixture.write.parquet(src)
+    stream = spark.readStream.schema(fixture.schema).parquet(src)
+    writer = (
         build(stream)
         .writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", chk)
         .outputMode("append")
         .trigger(availableNow=True)
-        .start()
     )
-    _drain(q, name)
+    _drain(_start_state_sized(spark, writer, src), name)
     return spark.read.parquet(out)
 
 
@@ -777,10 +777,10 @@ FROM o GROUP BY dataset_id
 # ---------------------------------------------------------------------------
 
 
-@_state_sized_shuffle
 def rt_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming P14 driver-verified: events are written to a file
-    stream TWICE (every row duplicated across micro-batch files), run
+    stream TWICE (one write of a union of two copies, one file, read in
+    one micro-batch), run
     through ``dropDuplicatesWithinWatermark`` with an availableNow
     trigger into a parquet sink, and read back — the returned rows must
     be exactly the original distinct events, which the oracle states as
@@ -795,7 +795,7 @@ def rt_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_id", "user_id", "ts", "value")
     )
     return _parquet_roundtrip(
-        spark, "rt_stream_dedup", (e, e),
+        spark, "rt_stream_dedup", e.unionAll(e),
         lambda stream: stream_dedup(stream, ["event_id"], time_col="ts"),
     )
 
@@ -805,7 +805,6 @@ SELECT event_id, user_id, ts, value FROM events WHERE user_id < 30
 """
 
 
-@_state_sized_shuffle
 def rt_stream_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming A1 driver-verified, including the WATERMARK CLOSE RULE:
     a watermarked 1-day tumbling count in append mode emits exactly the
@@ -821,7 +820,7 @@ def rt_stream_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_id", "ts")
     )
     back = _parquet_roundtrip(
-        spark, "rt_stream_daily_counts", (e,),
+        spark, "rt_stream_daily_counts", e,
         lambda stream: stream_daily_stats(
             stream, time_col="ts", value_col=None, watermark="1 day"
         ),
@@ -845,7 +844,6 @@ HAVING day_end <= m.mx - INTERVAL 1 DAY
 """
 
 
-@_state_sized_shuffle
 def rt_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming sessionization driver-verified end-to-end:
     ``session_window`` (30-min gap) in append mode through a parquet
@@ -863,7 +861,7 @@ def rt_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id", "ts")
     )
     back = _parquet_roundtrip(
-        spark, "rt_stream_sessions", (e,),
+        spark, "rt_stream_sessions", e,
         lambda stream: stream_sessions(
             stream, entity_col="user_id", time_col="ts", gap="30 minutes",
             watermark="1 day",
@@ -906,7 +904,6 @@ WHERE session_end <= m.mx - INTERVAL 1 DAY
 """
 
 
-@_state_sized_shuffle
 def rt_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful streaming operator driver-verified end-to-end:
     ``stream_entity_summaries`` (``applyInPandasWithState`` — one state
@@ -949,14 +946,13 @@ def rt_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _append(batch_df: DataFrame, _batch_id: int) -> None:
         batch_df.write.mode("append").parquet(out)
 
-    q = (
+    writer = (
         summ.writeStream.foreachBatch(_append)
         .option("checkpointLocation", chk)
         .outputMode("update")
         .trigger(availableNow=True)
-        .start()
     )
-    _drain(q, "rt_stream_stateful")
+    _drain(_start_state_sized(spark, writer, src), "rt_stream_stateful")
     back = spark.read.parquet(out)
     final = back.groupBy("entity").agg(
         F.max_by(F.struct("start_time", "end_time", "n_events"), "n_events").alias("s")
@@ -978,7 +974,6 @@ FROM events WHERE user_id < 25 GROUP BY user_id
 """
 
 
-@_state_sized_shuffle
 def rt_stream_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact distinct-actives streaming (A4) driver-verified: chained
     stateful operators — watermarked dropDuplicates on (user, day
@@ -995,7 +990,7 @@ def rt_stream_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id", "ts")
     )
     back = _parquet_roundtrip(
-        spark, "rt_stream_active_users", (e,),
+        spark, "rt_stream_active_users", e,
         lambda stream: stream_active_entities(
             stream, time_col="ts", entity_col="user_id", window="1 day",
             watermark="1 day", exact=True,
@@ -1127,7 +1122,6 @@ GROUP BY l_returnflag
 """
 
 
-@_state_sized_shuffle
 def rt_stream_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Featurize-while-ingesting driver-verified end-to-end: the PNG
     media fixture streams through ``stream_media_features`` (the SAME
@@ -1143,7 +1137,7 @@ def rt_stream_media(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 200)
     )
     return _parquet_roundtrip(
-        spark, "rt_stream_media", (media,), stream_media_features
+        spark, "rt_stream_media", media, stream_media_features
     )
 
 
@@ -1158,7 +1152,6 @@ FROM documents WHERE doc_id < 200
 """
 
 
-@_state_sized_shuffle
 def rt_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static broadcast enrichment driver-verified end-to-end:
     events stream through ``stream_enrich`` against the (static)
@@ -1183,7 +1176,7 @@ def rt_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("uid") % 3 != 0)  # leave holes → orphan path exercised
     )
     back = _parquet_roundtrip(
-        spark, "rt_stream_enrich", (e,),
+        spark, "rt_stream_enrich", e,
         lambda stream: stream_enrich(stream, catalog, "user_id", "uid").select(
             "user_id", "event_type", F.col("nation"),
             F.col("uid").isNull().alias("orphan"),
@@ -1376,7 +1369,6 @@ WHERE contains(lower(concat_ws(' ', title, summary, institution)), 'coastal')
 """
 
 
-@_state_sized_shuffle
 def rt_stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming SKETCH MAINTENANCE driver-verified: the event stream is
     drained one parquet file per micro-batch (``maxFilesPerTrigger=1``,
@@ -1431,7 +1423,6 @@ FROM vals GROUP BY 1
 """
 
 
-@_state_sized_shuffle
 def rt_stream_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming WEIGHTED RESERVOIR driver-verified: the document
     stream drains one parquet file per micro-batch, each batch
@@ -1516,10 +1507,9 @@ def _click_purchase_join(
             **join_kw,
         ).select("user_id", "click_id", "purchase_id")
 
-    return _parquet_roundtrip(spark, name, (e,), build)
+    return _parquet_roundtrip(spark, name, e, build)
 
 
-@_state_sized_shuffle
 def rt_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-STREAM interval join driver-verified end-to-end: the
     click and purchase slices of the event stream join on user within a
@@ -1531,7 +1521,6 @@ def rt_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _click_purchase_join(spark, sf_dir, "rt_stream_stream_join")
 
 
-@_state_sized_shuffle
 def rt_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT-OUTER stream-stream interval join driver-verified
     end-to-end: the attribution report that also keeps clicks that never
@@ -1551,7 +1540,6 @@ def rt_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_state_sized_shuffle
 def rt_stream_stream_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL-OUTER stream-stream interval join driver-verified
     end-to-end — the complete attribution audit: matches, clicks that
@@ -1648,7 +1636,6 @@ FROM c JOIN p ON p.user_id = c.user_id
 """
 
 
-@_state_sized_shuffle
 def rt_stream_gap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming FEED-HEALTH maintenance driver-verified: the event
     stream drains one TIME-SLICED parquet file per micro-batch (four

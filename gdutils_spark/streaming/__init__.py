@@ -551,13 +551,15 @@ def _guard_checkpoint_identity(sess, snapshot_dir: str, checkpoint: str):
         out.close()
 
 
-def _resolve_base(sess, snapshot_dir: str, batch_id: int, initial, empty):
-    """Shared base-resolution for the versioned-snapshot writers, with
-    the two silent-history-loss holes closed:
+def _resolve_base(sess, snapshot_dir: str, batch_id: int):
+    """Shared base-resolution for the versioned-snapshot writers: the
+    latest committed version below ``batch_id``, or ``None`` on a fresh
+    history (the writer's fold picks its initial state). The two
+    silent-history-loss holes are closed:
 
     * A missing PREDECESSOR for ``batch_id > 0`` (vacuumed too
       aggressively, or the snapshot dir wiped) means rebuilding from
-      ``initial`` would silently discard every change batches
+      the initial state would silently discard every change batches
       ``0..batch_id-1`` applied — raise instead. Retention rule this
       implies: a version must survive until the NEXT checkpoint commit
       is durable; vacuum everything older freely.
@@ -581,7 +583,7 @@ def _resolve_base(sess, snapshot_dir: str, batch_id: int, initial, empty):
             "was recreated over existing history; rebuilding from the "
             "initial state would silently discard applied batches"
         )
-    return initial if initial is not None else empty
+    return None
 
 
 def _versioned_snapshot_writer(
@@ -619,7 +621,7 @@ def _versioned_snapshot_writer(
             identity_ok.append(True)
         if _version_committed(sess, snapshot_dir, batch_id):
             return
-        base = _resolve_base(sess, snapshot_dir, batch_id, None, None)
+        base = _resolve_base(sess, snapshot_dir, batch_id)
         fold(batch, base).write.mode("overwrite").parquet(
             f"{snapshot_dir}/v={batch_id}"
         )

@@ -759,8 +759,7 @@ def test_versioned_snapshot_protocol_guards(spark, tmp_path):
     assert _version_committed(spark, snap, 1)
     assert not _version_committed(spark, snap, 7)
     # normal replay base
-    empty = spark.createDataFrame([], "id long, v string")
-    base = _resolve_base(spark, snap, 2, None, empty)
+    base = _resolve_base(spark, snap, 2)
     assert base.count() == 1
     # vacuumed predecessor: batch 5 with only v=0/v=1 present is fine
     # (highest committed < 5 is the base) — but a WIPED dir for a
@@ -769,12 +768,12 @@ def test_versioned_snapshot_protocol_guards(spark, tmp_path):
 
     gone = str(tmp_path / "gone")
     with pytest.raises(RuntimeError, match="versioned snapshot"):
-        _resolve_base(spark, gone, 3, None, empty)
+        _resolve_base(spark, gone, 3)
     # recreated checkpoint (batch 0) over existing history raises
     with pytest.raises(RuntimeError, match="versioned snapshot"):
-        _resolve_base(spark, snap, 0, None, empty)
-    # fresh start: batch 0, no history -> initial/empty
-    assert _resolve_base(spark, gone, 0, None, empty).count() == 0
+        _resolve_base(spark, snap, 0)
+    # fresh start: batch 0, no history -> no base (the fold's initial)
+    assert _resolve_base(spark, gone, 0) is None
 
 
 def test_stream_enrich_same_named_key_drops_duplicate(spark, stream_dirs):
@@ -1068,3 +1067,123 @@ def test_drain_stops_and_raises_on_timeout():
     ):
         _drain(q, "rt_stream_dedup")
     assert q.stopped and q.timeout == 300
+
+
+def _sized_dedup_writer(spark, tmp_path, foreach_batch=None):
+    """A small stateful stream (watermarked dedup) over a fresh source
+    under ``tmp_path``; returns its not yet started writer and the source."""
+    src, chk = str(tmp_path / "src"), str(tmp_path / "chk")
+    spark.range(200).select(
+        (F.col("id") % 50).alias("k"),
+        F.timestamp_seconds(F.col("id") * 60).alias("ts"),
+    ).coalesce(1).write.parquet(src)
+    stream = spark.readStream.schema("k long, ts timestamp").parquet(src)
+    dedup = stream_dedup(stream, ["k"], time_col="ts")
+    if foreach_batch is None:
+        writer = dedup.writeStream.format("noop")
+    else:
+        writer = dedup.writeStream.foreachBatch(foreach_batch)
+    writer = writer.option("checkpointLocation", chk).trigger(availableNow=True)
+    return writer, src
+
+
+@pytest.mark.parametrize("bound", [None, 1])
+def test_state_sized_start_partitions(spark, tmp_path, monkeypatch, bound):
+    """A stream over a small source runs one state-store partition; with
+    the byte bound at 1 every source byte asks for a partition, and the
+    session's shuffle width caps the count. The session conf is the same
+    after the start as before it."""
+    from gdutils_spark.queries_rt import _drain, _start_state_sized
+    from gdutils_spark.sources import tables
+
+    if bound is not None:
+        monkeypatch.setattr(tables, "_ONE_PARTITION_MAX_BYTES", bound)
+    writer, src = _sized_dedup_writer(spark, tmp_path)
+    before = spark.conf.getAll
+    q = _start_state_sized(spark, writer, src)
+    assert spark.conf.getAll == before
+    _drain(q, "sized")
+    want = 1 if bound is None else int(before["spark.sql.shuffle.partitions"])
+    assert want > 1 or bound is None
+    assert q.lastProgress["stateOperators"][0]["numShufflePartitions"] == want
+
+
+def test_state_sized_drain_lets_foreach_batch_scope_conf(spark, tmp_path):
+    """The sized count is scoped to the start only: a ``foreachBatch``
+    that enters ``scoped_conf`` on the stream thread runs while the
+    caller drains. Held through the drain, the scope's lock would block
+    the batch and the drain would time out."""
+    from gdutils_spark.queries_rt import _start_state_sized
+    from gdutils_spark.session import scoped_conf
+
+    seen = []
+
+    def batch(df, _batch_id):
+        with scoped_conf(df.sparkSession, {"spark.sql.shuffle.partitions": "3"}):
+            seen.append(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+            df.count()
+
+    writer, src = _sized_dedup_writer(spark, tmp_path, batch)
+    q = _start_state_sized(spark, writer, src)
+    finished = q.awaitTermination(60)
+    if not finished:
+        q.stop()
+    assert finished and seen and set(seen) == {"3"}
+
+
+def _recorded_shuffle_partitions(work_root, name: str) -> int:
+    """The shuffle width a round-trip query's stream recorded in its
+    checkpoint's first offset-log entry."""
+    import glob
+    import json
+
+    (log,) = glob.glob(f"{work_root}/gdutils_rt_{name}_*/chk/offsets/0")
+    with open(log) as f:
+        meta = json.loads(f.read().splitlines()[1])
+    return int(meta["conf"]["spark.sql.shuffle.partitions"])
+
+
+@pytest.mark.parametrize(
+    "name", ["rt_stream_dedup", "rt_stream_stream_join", "rt_stream_stateful"]
+)
+def test_rt_stream_rows_same_at_sized_count_and_cap(
+    spark, sf_smoke, tmp_path, monkeypatch, name
+):
+    """The stateful registry streams return the same rows at their sized
+    partition count (1 on the smoke tables) and at the session's cap."""
+    from gdutils_spark.queries_rt import RT_QUERIES
+    from gdutils_spark.sources import tables
+
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    rows = {}
+    for bound, want in ((tables._ONE_PARTITION_MAX_BYTES, 1), (1, cap)):
+        root = tmp_path / str(want)
+        root.mkdir()
+        monkeypatch.setenv("SPARK_GRAFT_RT_TMPDIR", str(root))
+        monkeypatch.setattr(tables, "_ONE_PARTITION_MAX_BYTES", bound)
+        rows[want] = sorted(RT_QUERIES[name](spark, sf_smoke).collect())
+        assert _recorded_shuffle_partitions(root, name.removeprefix("rt_")) == want
+    assert rows[1] and rows[1] == rows[cap]
+
+
+def test_rt_stream_dedup_source_is_one_write_of_two_copies(
+    spark, sf_smoke, tmp_path, monkeypatch
+):
+    """``rt_stream_dedup`` writes its doubled fixture in one job as one
+    file holding every returned event exactly twice. The union of two
+    single-partition scans keeps their one partition (the union zips
+    children of equal partitioning), so both copies land in one file,
+    which the drain reads in one micro-batch, as it read both of the
+    two files that two appends wrote."""
+    import glob
+
+    from gdutils_spark.queries_rt import rt_stream_dedup
+
+    monkeypatch.setenv("SPARK_GRAFT_RT_TMPDIR", str(tmp_path))
+    n = rt_stream_dedup(spark, sf_smoke).count()
+    (src,) = glob.glob(f"{tmp_path}/gdutils_rt_stream_dedup_*/src")
+    (part,) = glob.glob(f"{src}/part-*.parquet")
+    fixture = spark.read.parquet(part)
+    assert n > 0
+    assert fixture.count() == 2 * n
+    assert fixture.select("event_id").distinct().count() == n
